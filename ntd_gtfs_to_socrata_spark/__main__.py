@@ -22,6 +22,7 @@ import shutil
 import sys
 import uuid
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.plans.catalog_sync import route_catalog
@@ -40,7 +41,9 @@ def run_catalog(spark, feeds_path: str, catalog_path: str, out: str, public: boo
     feeds = spark.read.option("multiLine", True).json(feeds_path)
     catalog = spark.read.option("multiLine", True).json(catalog_path)
     routed = route_catalog(feeds, catalog).withColumn("make_public", F.lit(public))
-    _write(routed, os.path.join(out, "routed"))
+    routed_obs = Observation()
+    n_rows = F.count(F.lit(1)).alias("n")
+    _write(routed.observe(routed_obs, n_rows), os.path.join(out, "routed"))
     log = routed.select(
         F.col("feed_id"),
         F.col("agency_name"),
@@ -48,50 +51,63 @@ def run_catalog(spark, feeds_path: str, catalog_path: str, out: str, public: boo
         F.coalesce(F.col("existing_id"), F.lit("")).alias("message"),
     )
     _write(run_summary(log, run_successful=True), os.path.join(out, "run_log"), "append")
-    n = routed.count()
-    print(f"catalog: routed {n} feeds -> {out}/routed")
+    print(f"catalog: routed {routed_obs.get['n']} feeds -> {out}/routed")
     return 0
 
 
 def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
     # feed identity = archive basename (the reference keys feeds by the
-    # FeedID that selected each zip; file-based runs use the filename)
-    stops_raw = read_stops_from_zips(spark, zips_glob).withColumn(
-        "feed_id", F.regexp_extract(F.col("path"), r"([^/]+)\.zip$", 1)
+    # FeedID that selected each zip; file-based runs use the filename).
+    # The archives are decoded in Python (mapInPandas), so every branch
+    # below (snapshot, quarantine, changelog, deletions, run log) reads
+    # this run's cached decode instead of re-extracting the zips.
+    stops_raw = (
+        read_stops_from_zips(spark, zips_glob)
+        .withColumn("feed_id", F.regexp_extract(F.col("path"), r"([^/]+)\.zip$", 1))
+        .persist()
     )
     state_path = os.path.join(state_dir, "stops_state")
-    if os.path.isdir(state_path):
-        existing = spark.read.parquet(state_path)
-    else:
-        existing = spark.createDataFrame(
-            [], "feed_id_stop_id string, stop_name string, location string"
-        )
-    res = sync_stops(stops_raw, existing)
-    # two-phase swap via a run-unique staging dir: materialize the new
-    # snapshot before overwriting the state it was derived from (the
+    # two-phase swap via a run-unique staging dir: write the new snapshot
+    # beside the state it is derived from, then rename it into place (the
     # lakehouse target would MERGE in place instead)
     staging = state_path + ".next-" + uuid.uuid4().hex[:8]
-    _write(res.synced, staging)
-    _write(res.quarantine, os.path.join(out, "quarantine"))
-    _write(res.changelog, os.path.join(out, "changelog"))
-    # counts that read `existing` must materialize BEFORE the swap deletes
-    # the old state files (lazy plans re-execute on access)
-    n_deleted = res.deletions.count()
-    n_quarantined = res.quarantine.count()
-    n_synced = spark.read.parquet(staging).count()
-    spark.read.parquet(staging).write.mode("overwrite").parquet(state_path)
-    shutil.rmtree(staging, ignore_errors=True)
-    log = res.changelog.select(
-        F.col("feed_id"),
-        F.lit("").alias("agency_name"),
-        F.lit("upserted").alias("action"),
-        F.concat_ws(
-            "/", F.col("valid_rows").cast("string"), F.col("total_rows").cast("string")
-        ).alias("message"),
-    )
-    _write(run_summary(log, run_successful=True), os.path.join(out, "run_log"), "append")
+    keep_staging = False
+    try:
+        if os.path.isdir(state_path):
+            existing = spark.read.parquet(state_path)
+        else:
+            existing = spark.createDataFrame(
+                [], "feed_id_stop_id string, stop_name string, location string"
+            )
+        res = sync_stops(stops_raw, existing)
+        synced_obs, quarantine_obs = Observation(), Observation()
+        n_rows = F.count(F.lit(1)).alias("n")
+        _write(res.synced.observe(synced_obs, n_rows), staging)
+        _write(res.quarantine.observe(quarantine_obs, n_rows), os.path.join(out, "quarantine"))
+        _write(res.changelog, os.path.join(out, "changelog"))
+        # `deletions` reads the old state files, which the swap deletes:
+        # count it first (a lazy plan re-executes on every access)
+        n_deleted = res.deletions.count()
+        # from here on the staging dir may be the only complete snapshot
+        keep_staging = True
+        if os.path.isdir(state_path):
+            shutil.rmtree(state_path)
+        os.rename(staging, state_path)
+        log = res.changelog.select(
+            F.col("feed_id"),
+            F.lit("").alias("agency_name"),
+            F.lit("upserted").alias("action"),
+            F.concat_ws(
+                "/", F.col("valid_rows").cast("string"), F.col("total_rows").cast("string")
+            ).alias("message"),
+        )
+        _write(run_summary(log, run_successful=True), os.path.join(out, "run_log"), "append")
+    finally:
+        stops_raw.unpersist()
+        if not keep_staging:
+            shutil.rmtree(staging, ignore_errors=True)
     print(
-        f"stops_map: synced={n_synced} quarantined={n_quarantined} "
+        f"stops_map: synced={synced_obs.get['n']} quarantined={quarantine_obs.get['n']} "
         f"deleted={n_deleted} -> {state_path}"
     )
     return 0

@@ -71,9 +71,11 @@ def split_valid_invalid(
     df: DataFrame, is_valid: Column, flag_col: str = "is_valid"
 ) -> tuple[DataFrame, DataFrame]:
     """P10 (publish_to_catalog.py:335-342): compute the flag once, then two
-    filters. Catalyst collapses flag+filter into the scan stage; the source
-    is read once per branch with the predicate pushed down — no caching of
-    an intermediate needed at scale.
+    filters. Catalyst collapses flag+filter into the scan stage, so the
+    source is read once per branch. That is cheap for a codegen'd scan with
+    the predicate pushed down; a Python-decoded source (``mapInPandas``,
+    e.g. ``sources.zip_ingest``) would be decoded again per branch, so the
+    caller should persist it first (as ``run_stops_map`` does).
 
     Returns (clean, quarantine).
     """

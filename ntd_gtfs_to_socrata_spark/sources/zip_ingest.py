@@ -10,6 +10,12 @@ cluster instead of N serial HTTP+disk round trips.
 Errors are DATA, not exceptions (the reference's (response, errorMessage)
 tuple convention, L68-80): bad archives yield a row with ``error`` set so
 the pipeline can route them to the changelog (INVALID_URLS analog).
+
+The decode runs in Python and Spark cannot push anything into it, so every
+action on the returned frame re-reads and re-parses every archive. A
+caller with several outputs decodes once per run: ``run_stops_map``
+persists the stops frame before its branches and unpersists it at the end
+of the run.
 """
 
 from __future__ import annotations

@@ -220,12 +220,14 @@ def test_stream_writer_posts_microbatches(spark, tmp_path):
     )
     try:
         deadline = time.time() + 120
-        posted = 0
         while time.time() < deadline:
             if log.exists():
                 entries = [json.loads(l) for l in log.read_text().splitlines()]
                 posted = sum(e["n"] for e in entries if "n" in e)
-                if posted >= len(ROWS):
+                committed = sum(e["commit"] for e in entries if "commit" in e)
+                # stop only after the last epoch has committed: stopping
+                # between its POSTs and its commit aborts it
+                if posted >= len(ROWS) and committed >= len(ROWS):
                     break
             time.sleep(0.5)
     finally:
