@@ -11,7 +11,8 @@ sources/socrata.py and sinks.RevisionPublisher).
 `catalog_test` = `catalog` against the same inputs but marked private
 (the reference's test mode, publish_to_catalog.py:520, 592-593). Every
 mode appends a run-summary row under <out>/run_log (entry point 3,
-L605-608).
+L605-608), folded from metrics observed on the write it summarizes (the
+routed catalog, the stops changelog).
 """
 
 from __future__ import annotations
@@ -26,7 +27,12 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.plans.catalog_sync import route_catalog
-from ntd_gtfs_to_socrata_spark.plans.run_log import run_summary
+from ntd_gtfs_to_socrata_spark.plans.run_log import (
+    CATALOG_ACTIONS,
+    STOPS_ACTIONS,
+    log_metrics,
+    summary_row,
+)
 from ntd_gtfs_to_socrata_spark.plans.stops_sync import sync_stops
 from ntd_gtfs_to_socrata_spark.session import get_spark
 from ntd_gtfs_to_socrata_spark.sinks import LocalParquetSink
@@ -41,16 +47,19 @@ def run_catalog(spark, feeds_path: str, catalog_path: str, out: str, public: boo
     feeds = spark.read.option("multiLine", True).json(feeds_path)
     catalog = spark.read.option("multiLine", True).json(catalog_path)
     routed = route_catalog(feeds, catalog).withColumn("make_public", F.lit(public))
+    # the routed write carries the printed row count and the run log's
+    # metrics, so neither re-runs the reads and the join
     routed_obs = Observation()
-    n_rows = F.count(F.lit(1)).alias("n")
-    _write(routed.observe(routed_obs, n_rows), os.path.join(out, "routed"))
-    log = routed.select(
-        F.col("feed_id"),
-        F.col("agency_name"),
-        F.col("action"),
-        F.coalesce(F.col("existing_id"), F.lit("")).alias("message"),
+    _write(
+        routed.observe(
+            routed_obs,
+            F.count(F.lit(1)).alias("n"),
+            *log_metrics(CATALOG_ACTIONS, message=F.coalesce(F.col("existing_id"), F.lit(""))),
+        ),
+        os.path.join(out, "routed"),
     )
-    _write(run_summary(log, run_successful=True), os.path.join(out, "run_log"), "append")
+    summary = summary_row(spark, routed_obs.get, CATALOG_ACTIONS, run_successful=True)
+    _write(summary, os.path.join(out, "run_log"), "append")
     print(f"catalog: routed {routed_obs.get['n']} feeds -> {out}/routed")
     return 0
 
@@ -59,8 +68,8 @@ def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
     # feed identity = archive basename (the reference keys feeds by the
     # FeedID that selected each zip; file-based runs use the filename).
     # The archives are decoded in Python (mapInPandas), so every branch
-    # below (snapshot, quarantine, changelog, deletions, run log) reads
-    # this run's cached decode instead of re-extracting the zips.
+    # below (snapshot, quarantine, changelog, deletions) reads this run's
+    # cached decode instead of re-extracting the zips.
     stops_raw = (
         read_stops_from_zips(spark, zips_glob)
         .withColumn("feed_id", F.regexp_extract(F.col("path"), r"([^/]+)\.zip$", 1))
@@ -80,11 +89,16 @@ def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
                 [], "feed_id_stop_id string, stop_name string, location string"
             )
         res = sync_stops(stops_raw, existing)
-        synced_obs, quarantine_obs = Observation(), Observation()
+        # each count rides the write of the rows it counts: the snapshot
+        # and quarantine writes carry the printed counts, the changelog
+        # write the run log's metrics (one "upserted" entry per feed and no
+        # error lines, so the log has no message)
+        synced_obs, quarantine_obs, changelog_obs = Observation(), Observation(), Observation()
         n_rows = F.count(F.lit(1)).alias("n")
         _write(res.synced.observe(synced_obs, n_rows), staging)
         _write(res.quarantine.observe(quarantine_obs, n_rows), os.path.join(out, "quarantine"))
-        _write(res.changelog, os.path.join(out, "changelog"))
+        log_cols = log_metrics(STOPS_ACTIONS, action=F.lit("upserted"), message=F.lit(""))
+        _write(res.changelog.observe(changelog_obs, *log_cols), os.path.join(out, "changelog"))
         # `deletions` reads the old state files, which the swap deletes:
         # count it first (a lazy plan re-executes on every access)
         n_deleted = res.deletions.count()
@@ -93,15 +107,8 @@ def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
         if os.path.isdir(state_path):
             shutil.rmtree(state_path)
         os.rename(staging, state_path)
-        log = res.changelog.select(
-            F.col("feed_id"),
-            F.lit("").alias("agency_name"),
-            F.lit("upserted").alias("action"),
-            F.concat_ws(
-                "/", F.col("valid_rows").cast("string"), F.col("total_rows").cast("string")
-            ).alias("message"),
-        )
-        _write(run_summary(log, run_successful=True), os.path.join(out, "run_log"), "append")
+        summary = summary_row(spark, changelog_obs.get, STOPS_ACTIONS, run_successful=True)
+        _write(summary, os.path.join(out, "run_log"), "append")
     finally:
         stops_raw.unpersist()
         if not keep_staging:

@@ -2,7 +2,7 @@
 (publish_to_catalog.py:584-611): catalog routing from JSON inputs, a
 twice-run stops_map whose second run is a fixpoint (idempotent sync), a
 rerun over a changed archive, and a run that fails after its staging
-write."""
+write, and the job count of the run-log append."""
 
 from __future__ import annotations
 
@@ -13,7 +13,9 @@ import zipfile
 import pytest
 from py4j.protocol import Py4JJavaError
 
+import ntd_gtfs_to_socrata_spark.__main__ as cli
 from ntd_gtfs_to_socrata_spark.__main__ import run_catalog, run_stops_map
+from ntd_gtfs_to_socrata_spark.sinks import LocalParquetSink
 
 STOPS_CSV = (
     "stop_id,stop_name,stop_lat,stop_lon,location_type\n"
@@ -42,7 +44,7 @@ def _persisted_rdds(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
-def test_cli_catalog_routes_and_logs(spark, tmp_path):
+def _write_inputs(tmp_path) -> tuple[str, str]:
     feeds = [
         {"agency_name": "A", "feed_id": "F1", "fetch_link": "https://a.example.com/gtfs.zip",
          "agency_website": "https://a.example.com", "have_consent_for_ntm": True},
@@ -58,15 +60,21 @@ def test_cli_catalog_routes_and_logs(spark, tmp_path):
     fp, cp = tmp_path / "feeds.json", tmp_path / "catalog.json"
     fp.write_text(json.dumps(feeds))
     cp.write_text(json.dumps(catalog))
+    return str(fp), str(cp)
+
+
+def test_cli_catalog_routes_and_logs(spark, tmp_path):
+    fp, cp = _write_inputs(tmp_path)
     out = str(tmp_path / "out")
 
-    assert run_catalog(spark, str(fp), str(cp), out, public=True) == 0
+    assert run_catalog(spark, fp, cp, out, public=True) == 0
     routed = {r["feed_id"]: r["action"] for r in spark.read.parquet(out + "/routed").collect()}
     # F1 matches the catalog entry -> update; F2 is new -> create; F3 has
     # no consent -> filtered out entirely
     assert routed == {"F1": "update", "F2": "create"}
     log = spark.read.parquet(out + "/run_log").collect()
     assert len(log) == 1 and log[0]["run_successful"]
+    assert (log[0]["create"], log[0]["update"], log[0]["error"]) == (1, 1, 0)
 
 
 def test_cli_stops_map_is_idempotent(spark, tmp_path):
@@ -88,7 +96,8 @@ def test_cli_stops_map_is_idempotent(spark, tmp_path):
     second = _state_keys(spark, state)
     assert second == first
     # run_log appends one row per run
-    assert spark.read.parquet(out + "/run_log").count() == 2
+    log = spark.read.parquet(out + "/run_log").collect()
+    assert [(r["upserted"], r["error"], r["error_blob"]) for r in log] == [(1, 0, "")] * 2
 
 
 def test_cli_stops_map_rerun_sees_changed_archive(spark, tmp_path, capsys):
@@ -139,3 +148,52 @@ def test_cli_stops_map_failure_keeps_state_and_cleans_up(spark, tmp_path):
     assert _state_keys(spark, str(state)) == before
     assert list(state.glob("stops_state.next-*")) == []
     assert _persisted_rdds(spark) <= cached
+
+
+def _jobs_in_group(sc, group: str, call):
+    """Run ``call()`` under a job group; return its result and the ids of
+    the jobs it launched."""
+    sc.setJobGroup(group, group)
+    try:
+        result = call()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cli_run_log_append_is_one_job(spark, tmp_path, monkeypatch):
+    """The run log's counts ride the writes the run modes already do:
+    building the summary launches no job and appending it launches one.
+    A pivot of the log would re-run the catalog or changelog plan here."""
+    sc = spark.sparkContext
+    writes: list[tuple[str, list[int]]] = []
+    builds: list[list[int]] = []
+    write, build = LocalParquetSink.write, cli.summary_row
+
+    def recording_write(self, df):
+        stats, ids = _jobs_in_group(sc, f"sink-write-{len(writes)}", lambda: write(self, df))
+        writes.append((self.path, ids))
+        return stats
+
+    def recording_build(*args, **kwargs):
+        frame, ids = _jobs_in_group(
+            sc, f"summary-build-{len(builds)}", lambda: build(*args, **kwargs)
+        )
+        builds.append(ids)
+        return frame
+
+    monkeypatch.setattr(LocalParquetSink, "write", recording_write)
+    monkeypatch.setattr(cli, "summary_row", recording_build)
+
+    fp, cp = _write_inputs(tmp_path)
+    zips = tmp_path / "zips"
+    zips.mkdir()
+    _write_archive(zips / "feedX.zip", STOPS_CSV)
+    out = tmp_path / "out"
+    assert run_catalog(spark, fp, cp, str(out / "catalog"), public=True) == 0
+    assert run_stops_map(spark, str(zips), str(tmp_path / "state"), str(out / "stops")) == 0
+
+    appends = [ids for path, ids in writes if path.endswith("run_log")]
+    assert [len(ids) for ids in appends] == [1, 1], writes
+    assert builds == [[], []]

@@ -3,10 +3,18 @@ run modes recomposed, against injected transports and local sinks."""
 
 from __future__ import annotations
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
+from ntd_gtfs_to_socrata_spark.operators import changelog as CL
 from ntd_gtfs_to_socrata_spark.plans.catalog_sync import route_catalog
-from ntd_gtfs_to_socrata_spark.plans.run_log import run_summary
+from ntd_gtfs_to_socrata_spark.plans.run_log import (
+    CATALOG_ACTIONS,
+    STOPS_ACTIONS,
+    log_metrics,
+    summary_row,
+)
 from ntd_gtfs_to_socrata_spark.plans.stops_sync import sync_stops
 from ntd_gtfs_to_socrata_spark.sinks import (
     HttpBatchSink,
@@ -121,6 +129,17 @@ def test_http_batch_sink_batches_and_retries(spark, tmp_path):
     assert any("café".encode() in b for b in bodies)
 
 
+LOG_SCHEMA = "feed_id string, action string, message string"
+
+
+def _observed_summary(spark, log, actions, out_dir):
+    """The run modes' path: the metrics ride a write of the log, and the
+    summary is built from what that write observed."""
+    obs = Observation()
+    LocalParquetSink(str(out_dir)).write(log.observe(obs, *log_metrics(actions)))
+    return summary_row(spark, obs.get, actions, run_successful=True)
+
+
 def test_run_log_summary_and_append(spark, tmp_path):
     log = spark.createDataFrame(
         [
@@ -128,16 +147,77 @@ def test_run_log_summary_and_append(spark, tmp_path):
             ("B", "upserted", "10 rows"),
             ("C", "error", "fetch failed"),
         ],
-        "feed_id string, action string, message string",
+        LOG_SCHEMA,
     )
-    summary = run_summary(log, run_successful=True)
+    summary = _observed_summary(spark, log, STOPS_ACTIONS, tmp_path / "changelog")
     row = summary.collect()[0]
     assert row["upserted"] == 2 and row["error"] == 1
     assert row["error_blob"] == "C: fetch failed"
+    assert row["run_successful"]
     sink = LocalParquetSink(str(tmp_path / "runlog"), mode="append")
     sink.write(summary)
     sink.write(summary)
     assert spark.read.parquet(str(tmp_path / "runlog")).count() == 2
+
+
+def test_observed_run_log_matches_changelog_fold(spark, tmp_path):
+    """The observed summary equals the changelog operators' fold (A3
+    distinct feeds per action, A4 sorted error lines)."""
+    log = spark.createDataFrame(
+        [
+            ("A", "create", ""),
+            ("A", "create", "retried"),  # one feed twice under one action
+            ("B", "update", "aaaa-0001"),
+            ("Z", "error", "timeout"),  # error lines out of order
+            ("C", "error", "fetch failed"),
+            ("D", "error", None),
+        ],
+        LOG_SCHEMA,
+    )
+    counts = {r["action"]: r["n_feeds"] for r in CL.action_counts(log).collect()}
+    blob = CL.fold_errors(log.filter(F.col("action") == "error")).first()["error_blob"]
+    assert counts == {"create": 1, "update": 1, "error": 3}
+    assert blob == "C: fetch failed\n\nD\n\nZ: timeout"
+
+    row = _observed_summary(spark, log, CATALOG_ACTIONS, tmp_path / "routed").first()
+    assert {a: row[a] for a in CATALOG_ACTIONS} == counts
+    assert row["error_blob"] == blob
+
+
+def test_run_log_schema_is_fixed_per_vocabulary(spark, tmp_path):
+    """Appended nights with different actions (and none at all) read back
+    with one bigint column per action of the vocabulary, 0 when absent. A
+    pivot without values wrote only the actions present each night."""
+    nights = [
+        [("A", "create", ""), ("B", "update", "aaaa-0001")],
+        [("B", "update", "aaaa-0001")],
+        [],
+    ]
+    sink = LocalParquetSink(str(tmp_path / "run_log"), mode="append")
+    for i, rows in enumerate(nights):
+        log = spark.createDataFrame(rows, LOG_SCHEMA)
+        sink.write(_observed_summary(spark, log, CATALOG_ACTIONS, tmp_path / f"routed{i}"))
+
+    back = spark.read.parquet(str(tmp_path / "run_log"))
+    assert back.columns == [*CATALOG_ACTIONS, "error_blob", "run_successful", "run_ts"]
+    assert all(back.schema[a].dataType == LongType() for a in CATALOG_ACTIONS)
+    got = sorted((r["create"], r["update"], r["error"], r["error_blob"]) for r in back.collect())
+    assert got == [(0, 0, 0, ""), (0, 1, 0, ""), (1, 1, 0, "")]
+
+
+def test_summary_row_is_built_in_the_jvm(spark):
+    """One partition and no scan of a Python RDD. Appending the same row
+    made with ``spark.createDataFrame([...])`` from a Python list (a
+    ``Scan ExistingRDD`` over 4 partitions) took 0.46 s, against 0.17 s
+    for this literal frame (medians of 10 appends, warm local[4] session
+    on a 4-vCPU host)."""
+    row = summary_row(
+        spark, {"create": 1, "update": 2, "error": 0, "error_blob": ""}, CATALOG_ACTIONS, True
+    )
+    assert row.rdd.getNumPartitions() == 1
+    plan = row._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+    assert row.first()["update"] == 2
 
 
 def test_observe_captures_run_metrics_without_second_scan(spark, sf_dir):
