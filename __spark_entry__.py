@@ -11,12 +11,13 @@ thin adapter over its query registry.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ntd_gtfs_to_socrata_spark.queries import (  # noqa: E402
     ORACLES,

@@ -68,8 +68,8 @@ def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
     # feed identity = archive basename (the reference keys feeds by the
     # FeedID that selected each zip; file-based runs use the filename).
     # The archives are decoded in Python (mapInPandas), so every branch
-    # below (snapshot, quarantine, changelog, deletions) reads this run's
-    # cached decode instead of re-extracting the zips.
+    # below (snapshot, quarantine, changelog) reads this run's cached
+    # decode instead of re-extracting the zips.
     stops_raw = (
         read_stops_from_zips(spark, zips_glob)
         .withColumn("feed_id", F.regexp_extract(F.col("path"), r"([^/]+)\.zip$", 1))
@@ -89,19 +89,19 @@ def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
                 [], "feed_id_stop_id string, stop_name string, location string"
             )
         res = sync_stops(stops_raw, existing)
-        # each count rides the write of the rows it counts: the snapshot
-        # and quarantine writes carry the printed counts, the changelog
-        # write the run log's metrics (one "upserted" entry per feed and no
-        # error lines, so the log has no message)
-        synced_obs, quarantine_obs, changelog_obs = Observation(), Observation(), Observation()
-        n_rows = F.count(F.lit(1)).alias("n")
-        _write(res.synced.observe(synced_obs, n_rows), staging)
-        _write(res.quarantine.observe(quarantine_obs, n_rows), os.path.join(out, "quarantine"))
+        # each count rides the write of the rows it counts: the staging
+        # write carries the synced and deleted counts (observed on the sync
+        # join, res.sync_counts), the quarantine write the quarantined
+        # count, the changelog write the run log's metrics (one "upserted"
+        # entry per feed and no error lines, so the log has no message)
+        quarantine_obs, changelog_obs = Observation(), Observation()
+        _write(res.synced, staging)
+        _write(
+            res.quarantine.observe(quarantine_obs, F.count(F.lit(1)).alias("n")),
+            os.path.join(out, "quarantine"),
+        )
         log_cols = log_metrics(STOPS_ACTIONS, action=F.lit("upserted"), message=F.lit(""))
         _write(res.changelog.observe(changelog_obs, *log_cols), os.path.join(out, "changelog"))
-        # `deletions` reads the old state files, which the swap deletes:
-        # count it first (a lazy plan re-executes on every access)
-        n_deleted = res.deletions.count()
         # from here on the staging dir may be the only complete snapshot
         keep_staging = True
         if os.path.isdir(state_path):
@@ -113,9 +113,10 @@ def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
         stops_raw.unpersist()
         if not keep_staging:
             shutil.rmtree(staging, ignore_errors=True)
+    counts = res.sync_counts.get
     print(
-        f"stops_map: synced={synced_obs.get['n']} quarantined={quarantine_obs.get['n']} "
-        f"deleted={n_deleted} -> {state_path}"
+        f"stops_map: synced={counts['n']} quarantined={quarantine_obs.get['n']} "
+        f"deleted={counts['deleted']} -> {state_path}"
     )
     return 0
 

@@ -16,17 +16,18 @@ membership tests; here each is a declarative join Catalyst can plan
       row_number window dedupe.
 - J5  full sync = J4 + J3  — snapshot replace by key
       (publish_to_catalog.py:354): MERGE ... WHEN NOT MATCHED BY SOURCE
-      THEN DELETE semantics.
+      THEN DELETE semantics; the snapshot is incoming deduplicated by key,
+      and ``full_sync_with_deletions`` counts J3 on the same keyed join.
 
-Scale notes: the upsert shuffles once on the key (window partitionBy);
-both inputs arrive key-partitioned so AQE coalesces. Deletion anti-join
-on the same key reuses the shuffle exchange when planned together. For a
-lakehouse target this whole module maps to a single Delta/Iceberg MERGE.
+Scale notes: the upsert shuffles once on the key (window partitionBy).
+The full sync shuffles incoming's rows once on the key and existing's key
+column only. For a lakehouse target this whole module maps to a single
+Delta/Iceberg MERGE.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -87,13 +88,62 @@ def upsert(
 
 
 def full_sync(existing: DataFrame, incoming: DataFrame, key: str | list[str]) -> DataFrame:
-    """J5: upsert + delete-absent ⇒ the post-sync snapshot equals
-    ``incoming`` deduped by key (incoming wins); rows only in ``existing``
-    are dropped. Expressed as upsert-then-semi-join so the idempotency
-    property (sync twice = fixpoint) is explicit in the plan."""
+    """J5: upsert + delete-absent. The post-sync snapshot is ``incoming``
+    deduplicated by key (incoming wins, one of its rows per key, NULL keys
+    dropped); rows only in ``existing`` are gone. The law it satisfies:
+
+        full_sync(E, I, k) == upsert(E, I, k) ⋉ distinct(I.k)    (left-semi on k)
+
+    row for row and column for column: ``incoming``'s columns, then the
+    columns only ``existing`` has, all NULL (``unionByName`` with missing
+    columns allowed). Syncing twice against the same incoming is a
+    fixpoint. Only ``incoming`` is shuffled: an existing row can survive
+    only under an incoming key, where an incoming row wins, so no existing
+    row reaches the snapshot and ``existing`` contributes its schema
+    alone."""
     keys = [key] if isinstance(key, str) else list(key)
-    merged = upsert(existing, incoming, keys)
-    return merged.join(incoming.select(*keys).distinct(), on=keys, how="left_semi")
+    own = {c.lower() for c in incoming.columns}  # unionByName matches names case-insensitively
+    missing = [f for f in existing.schema.fields if f.name.lower() not in own]
+    return (
+        incoming.dropna(how="any", subset=keys)
+        .dropDuplicates(keys)
+        .select("*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing])
+    )
+
+
+def full_sync_with_deletions(
+    existing: DataFrame, incoming: DataFrame, key: str, counts: Observation
+) -> tuple[DataFrame, DataFrame]:
+    """J5 + J3 from ONE keyed full-outer join of ``full_sync``'s rows to
+    ``existing``'s per-key row counts; only ``existing``'s key column is
+    shuffled (partial counts per key). Returns ``(snapshot, deletions)``:
+
+    - ``snapshot`` = ``full_sync(existing, incoming, key)``, observing on
+      the join ``n`` (its rows) and ``deleted`` (the existing rows whose
+      key is gone, = ``locate_deletions(existing, incoming, key).count()``,
+      duplicate and NULL existing keys included) into ``counts``, so the
+      action that writes the snapshot also counts the deletions;
+    - ``deletions`` = one ``(key, rows)`` row per existing-only key, lazy
+      over the same join.
+    """
+    synced = full_sync(existing, incoming, key)
+    old = existing.groupBy(F.col(key).alias("__old_key")).agg(
+        F.count(F.lit(1)).alias("__old_rows")
+    )
+    joined = synced.join(old, F.col(key) == F.col("__old_key"), "full_outer")
+    kept = F.col(key).isNotNull()  # full_sync drops NULL keys
+    observed = joined.observe(
+        counts,
+        F.count(F.col(key)).alias("n"),
+        F.coalesce(F.sum(F.when(~kept, F.col("__old_rows"))), F.lit(0)).alias("deleted"),
+    )
+    # the filters sit above the observation: below it, Catalyst would turn
+    # the full-outer join into a one-sided one and lose the other side
+    snapshot = observed.filter(kept).select(*synced.columns)
+    deletions = joined.filter(~kept).select(
+        F.col("__old_key").alias(key), F.col("__old_rows").alias("rows")
+    )
+    return snapshot, deletions
 
 
 def snapshot_diff(

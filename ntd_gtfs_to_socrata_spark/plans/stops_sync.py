@@ -5,7 +5,9 @@ as one declarative flow:
     stops rows (all feeds at once, not a serial per-feed loop)
       → normalize → validate → split valid/quarantine
       → derive surrogate key + WKT point
-      → upsert into existing sink state (J4) + anti-join deletions (J3)
+      → sync against existing sink state (J5 = J4 + J3): one keyed
+        full-outer join of the deduplicated rows to existing's per-key
+        counts, so the snapshot write also counts the deletions
       → per-feed changelog counts (A1/A2)
 
 The per-feed serial loop becomes a partition dimension: every step is
@@ -16,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.operators import changelog as CL
@@ -29,9 +31,10 @@ from ntd_gtfs_to_socrata_spark.operators import validation as V
 class StopsSyncResult:
     clean: DataFrame        # validated, keyed rows that were upserted
     quarantine: DataFrame   # invalid rows retained for audit (P10)
-    synced: DataFrame       # post-sync snapshot (J5)
-    deletions: DataFrame    # keys removed (J3)
+    synced: DataFrame       # post-sync snapshot (J5), observing sync_counts
+    deletions: DataFrame    # keys removed, with their existing row counts (J3)
     changelog: DataFrame    # per-feed A1 counts
+    sync_counts: Observation  # n (rows synced), deleted (existing rows removed)
 
 
 def sync_stops(
@@ -53,10 +56,11 @@ def sync_stops(
         "feed_id_stop_id", K.surrogate_key(F.col(feed_id_col), F.col("stop_id"))
     ).withColumn("location", K.wkt_point(F.col("stop_lon"), F.col("stop_lat")))
 
-    synced = M.full_sync(existing, keyed, key="feed_id_stop_id")
-    deletions = M.locate_deletions(
-        existing, keyed.select("feed_id_stop_id"), key="feed_id_stop_id"
+    sync_counts = Observation()
+    synced, deletions = M.full_sync_with_deletions(
+        existing, keyed, "feed_id_stop_id", sync_counts
     )
     changelog = CL.quarantine_counts(flagged, feed_id_col)
     return StopsSyncResult(clean=keyed, quarantine=quarantine, synced=synced,
-                           deletions=deletions, changelog=changelog)
+                           deletions=deletions, changelog=changelog,
+                           sync_counts=sync_counts)

@@ -26,11 +26,7 @@ from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.queries import register
 from ntd_gtfs_to_socrata_spark.sinks import HttpBatchSink, RevisionPublisher
-from ntd_gtfs_to_socrata_spark.sources.zip_ingest import (
-    extract_member,
-    parse_member_csv,
-    read_zip_blobs,
-)
+from ntd_gtfs_to_socrata_spark.sources.zip_ingest import read_member_csv, read_zip_blobs
 
 _FIXTURE_DIR = "/root/repo/.synthetic_fixtures/zips"
 
@@ -73,9 +69,10 @@ def _ensure_zip_fixtures() -> str:
 @register("s5_zip_member_extract")
 def s5_zip_member_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+S5 (+S6-in-S5): binaryFile scan over a 4-archive fixture set →
-    distributed member extraction → member-CSV parse, with extraction
-    failures surfaced as DATA rows (the reference's (response, error)
-    convention, publish_to_catalog.py:68-80) rather than exceptions.
+    member extraction and member-CSV parse in one distributed Python pass,
+    with extraction failures surfaced as DATA rows (the reference's
+    (response, error) convention, publish_to_catalog.py:68-80) rather than
+    exceptions.
 
     Output: one row per parsed stop (error NULL) plus one row per failed
     archive (stop columns NULL) — 5 stops + 2 errors = 7 rows. Scale
@@ -83,21 +80,13 @@ def s5_zip_member_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas; no driver-side loop (the reference downloads and parses
     serially, L316-325)."""
     path_glob = _ensure_zip_fixtures()
-    blobs = read_zip_blobs(spark, path_glob)
-    members = extract_member(blobs, "stops.txt")
-    parsed = parse_member_csv(members).select(
+    rows = read_member_csv(read_zip_blobs(spark, path_glob), "stops.txt")
+    return rows.select(
         F.element_at(F.split("path", "/"), -1).alias("archive"),
         "stop_id",
         "stop_name",
-        F.lit(None).cast("string").alias("error"),
-    )
-    failures = members.filter(F.col("error").isNotNull()).select(
-        F.element_at(F.split("path", "/"), -1).alias("archive"),
-        F.lit(None).cast("string").alias("stop_id"),
-        F.lit(None).cast("string").alias("stop_name"),
         "error",
     )
-    return parsed.unionByName(failures)
 
 
 def _recording_ok_transport(url: str, body: bytes, headers: dict) -> tuple[int, str]:

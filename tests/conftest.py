@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# import the package of the checkout these tests live in
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from ntd_gtfs_to_socrata_spark.session import get_spark
 

@@ -1,8 +1,9 @@
 """End-to-end CLI runs mirroring the reference's argv modes
 (publish_to_catalog.py:584-611): catalog routing from JSON inputs, a
 twice-run stops_map whose second run is a fixpoint (idempotent sync), a
-rerun over a changed archive, and a run that fails after its staging
-write, and the job count of the run-log append."""
+rerun over a changed archive, a run that fails after its staging write,
+the job count of the run-log append, and a stops run that launches jobs
+only through its writes and reads."""
 
 from __future__ import annotations
 
@@ -197,3 +198,25 @@ def test_cli_run_log_append_is_one_job(spark, tmp_path, monkeypatch):
     appends = [ids for path, ids in writes if path.endswith("run_log")]
     assert [len(ids) for ids in appends] == [1, 1], writes
     assert builds == [[], []]
+
+
+def test_cli_stops_map_launches_jobs_only_through_writes_and_reads(spark, tmp_path, monkeypatch):
+    """The stops run's printed counts (synced, quarantined, deleted) and
+    its run-log metrics are observed on the writes it does anyway: no
+    count, collect or first of its own re-runs a plan."""
+    zips = tmp_path / "zips"
+    zips.mkdir()
+    _write_archive(zips / "feedX.zip", STOPS_CSV + "4,Fourth,43.0,-120.0,0\n")
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    assert run_stops_map(spark, str(zips), state, out) == 0
+    _write_archive(zips / "feedX.zip", STOPS_CSV)
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("the stops run launched a job outside its writes and reads")
+
+    frame_class = type(spark.range(1))  # the session's concrete DataFrame class
+    with monkeypatch.context() as m:
+        for name in ("count", "collect", "first"):
+            m.setattr(frame_class, name, refuse)
+        assert run_stops_map(spark, str(zips), state, out) == 0
+    assert _state_keys(spark, state) == {"feedX_1", "feedX_3"}

@@ -14,10 +14,13 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 pytestmark = pytest.mark.slow
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_full_registry_matches_oracles():
@@ -25,7 +28,7 @@ def test_full_registry_matches_oracles():
         [sys.executable, "tools/check_oracle.py", "/root/testdata/sf0.01"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=3600,
     )
     tail = "\n".join(proc.stdout.splitlines()[-40:])
@@ -41,7 +44,7 @@ def test_full_registry_matches_oracles_sf01():
         [sys.executable, "tools/check_oracle.py", "/root/testdata/sf0.1"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=7200,
     )
     tail = "\n".join(proc.stdout.splitlines()[-40:])

@@ -27,9 +27,13 @@ to run when plan shapes or serialization surfaces change).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 pytestmark = pytest.mark.cluster
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 SF = "/root/testdata/sf0.001"
 
@@ -97,7 +101,7 @@ def cluster_results():
             # otherwise dies with ModuleNotFoundError. local[] can never
             # see this. On a real cluster this is the --py-files /
             # pip-install-on-workers deployment step.
-            .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+            .config("spark.executorEnv.PYTHONPATH", str(REPO_ROOT))
             .getOrCreate()
         )
         try:

@@ -8,12 +8,14 @@ import io
 import subprocess
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT / "tools"))
 
 from audit_plans import global_window_lines  # noqa: E402
 
@@ -59,7 +61,7 @@ def test_full_registry_plan_audit():
         [sys.executable, "tools/audit_plans.py", "/root/testdata/sf0.001"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=1800,
     )
     flagged = [line for line in proc.stdout.splitlines() if "!!" in line]

@@ -56,6 +56,8 @@ def test_stops_sync_end_to_end(spark):
     assert synced["A_1"]["stop_name"] == "Good"
     assert "A_7" not in synced and "A_3" in synced and "B_9" in synced
     assert [r["feed_id_stop_id"] for r in res.deletions.collect()] == ["A_7"]
+    # collecting the snapshot fills the counts observed on the sync join
+    assert res.sync_counts.get == {"n": 3, "deleted": 1}
     cl = {r["feed_id"]: r for r in res.changelog.collect()}
     assert cl["A"]["valid_rows"] == 2 and cl["A"]["invalid_rows"] == 1
     assert cl["A"]["valid_rows"] + cl["A"]["invalid_rows"] == cl["A"]["total_rows"]

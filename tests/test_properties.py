@@ -27,23 +27,41 @@ def _df(spark, rows):
     )
 
 
+NULLABLE_KEYS = st.one_of(st.none(), st.integers(min_value=0, max_value=5))
+KEYED_ROWS = st.lists(st.tuples(NULLABLE_KEYS, st.text(alphabet="abc", max_size=2)), max_size=8)
+
+
 @slow
-@given(existing=ROWS, incoming=ROWS)
+@given(existing=KEYED_ROWS, incoming=KEYED_ROWS)
 def test_full_sync_snapshot_law(spark, existing, incoming):
-    """After full_sync, the key set equals incoming's key set, and every
-    key maps to an incoming row's value (incoming wins)."""
-    e, i = _df(spark, existing), _df(spark, incoming)
-    out = M.full_sync(e, i, "k").collect()
-    got_keys = {r["k"] for r in out}
-    want_keys = {k for k, _ in incoming}
-    assert got_keys == want_keys
-    inc_by_key = {}
+    """full_sync and the one-join J5/J3 plan ≡ the formulas they replaced:
+    the snapshot equals upsert-then-semi-join (same keys, one incoming
+    value per key, same columns), and the observed ``deleted`` equals the
+    anti-join's row count — with duplicate and NULL keys on both sides and
+    a column only ``existing`` has."""
+    from pyspark.sql import Observation
+
+    e = spark.createDataFrame(
+        [(k, v, f"x{i}") for i, (k, v) in enumerate(existing)],
+        "k int, v string, only_existing string",
+    )
+    i = _df(spark, incoming)
+    # the J5 formula before the one-join plan, as the reference
+    want = M.upsert(e, i, "k").join(i.select("k").distinct(), on="k", how="left_semi")
+    want_keys = sorted(r["k"] for r in want.collect())
+    values = {}
     for k, v in incoming:
-        inc_by_key.setdefault(k, set()).add(v)
-    for r in out:
-        assert r["v"] in inc_by_key[r["k"]]
-    # exactly one row per key
-    assert len(out) == len(want_keys)
+        values.setdefault(k, set()).add(v)
+    counts = Observation()
+    snapshot, deletions = M.full_sync_with_deletions(e, i, "k", counts)
+    for frame in (M.full_sync(e, i, "k"), snapshot):
+        got = frame.collect()
+        assert frame.columns == want.columns == ["k", "v", "seq", "only_existing"]
+        assert sorted(r["k"] for r in got) == want_keys
+        assert all(r["v"] in values[r["k"]] and r["only_existing"] is None for r in got)
+    n_deleted = M.locate_deletions(e, i, "k").count()
+    assert counts.get == {"n": len(want_keys), "deleted": n_deleted}
+    assert sum(r["rows"] for r in deletions.collect()) == n_deleted
 
 
 @slow

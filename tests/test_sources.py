@@ -5,11 +5,17 @@ from __future__ import annotations
 
 import io
 import os
+import sys
 import zipfile
+from pathlib import Path
 
 import pytest
 
 from ntd_gtfs_to_socrata_spark.sources import csv_ingest, zip_ingest
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+from measure_exchanges import executed_node_counts  # noqa: E402
 
 DIRTY_STOPS_CSV = (
     "﻿stop_id,stop_name,stop_lat,stop_lon,location_type\n"
@@ -68,11 +74,42 @@ def test_conform_missing_and_extra_columns(spark):
 
 def test_zip_member_extraction_errors_as_data(spark, zip_dir):
     blobs = zip_ingest.read_zip_blobs(spark, zip_dir)
-    members = zip_ingest.extract_member(blobs, "stops.txt")
-    rows = {os.path.basename(r["path"]): r for r in members.collect()}
-    assert rows["feedA.zip"]["error"] is None and rows["feedA.zip"]["content"]
-    assert "not found" in rows["feedB.zip"]["error"]
-    assert "bad zip" in rows["feedC.zip"]["error"]
+    rows = zip_ingest.read_member_csv(blobs, "stops.txt").collect()
+    by_archive: dict[str, list] = {}
+    for r in rows:
+        by_archive.setdefault(os.path.basename(r["path"]), []).append(r)
+    assert len(by_archive["feedA.zip"]) == 5
+    assert all(r["error"] is None for r in by_archive["feedA.zip"])
+    (missing,), (corrupt,) = by_archive["feedB.zip"], by_archive["feedC.zip"]
+    assert "not found" in missing["error"] and missing["stop_id"] is None
+    assert "bad zip" in corrupt["error"] and corrupt["stop_id"] is None
+
+
+def test_zip_member_unparseable_is_an_error_row(spark, tmp_path):
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        z.writestr("stops.txt", "")  # no header row: pandas cannot parse it
+    (tmp_path / "empty.zip").write_bytes(buf.getvalue())
+    blobs = zip_ingest.read_zip_blobs(spark, str(tmp_path))
+    (row,) = zip_ingest.read_member_csv(blobs, "stops.txt").collect()
+    assert "unparseable member" in row["error"] and row["stop_id"] is None
+    assert zip_ingest.read_stops_from_zips(spark, str(tmp_path)).collect() == []
+
+
+def _python_nodes(df) -> int:
+    df.collect()
+    return executed_node_counts(df)["MapInPandasExec"]
+
+
+def test_zip_decode_is_one_python_pass(spark, zip_dir):
+    """Extraction and parsing share one mapInPandas: each Python node costs
+    every task a Python runner set-up, which dwarfs the decode itself."""
+    from ntd_gtfs_to_socrata_spark.queries.sources_sinks_q import s5_zip_member_extract
+
+    assert _python_nodes(zip_ingest.read_stops_from_zips(spark, zip_dir)) == 1
+    s5 = s5_zip_member_extract(spark, None)
+    assert _python_nodes(s5) == 1
+    assert len(s5.collect()) == 7  # 5 stops, a missing member, a corrupt archive
 
 
 def test_stops_from_zips_end_to_end(spark, zip_dir):

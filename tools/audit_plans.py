@@ -11,8 +11,9 @@ import io
 import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from ntd_gtfs_to_socrata_spark.operators.stagecache import release_all
 from ntd_gtfs_to_socrata_spark.queries import REGISTRY, load_all_query_modules

@@ -27,8 +27,9 @@ from __future__ import annotations
 
 import sys
 from collections import Counter
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def _iter_seq(seq):
@@ -67,13 +68,21 @@ def _walk(node, ident, seen: set, counts: Counter) -> None:
         _walk(ch, ident, seen, counts)
 
 
-def executed_exchange_counts(df) -> dict[str, int]:
-    """Walk an ALREADY-EXECUTED DataFrame's final plan; return the counts
-    described in the module docstring. Must be called after an action ran
-    on ``df`` itself (e.g. ``df.collect()``), not on a derived frame."""
+def executed_node_counts(df) -> Counter:
+    """Walk an ALREADY-EXECUTED DataFrame's final plan; count its physical
+    nodes by class name (each JVM node once). Must be called after an
+    action ran on ``df`` itself (e.g. ``df.collect()``), not on a derived
+    frame."""
     counts: Counter = Counter()
     ident = df.sparkSession._jvm.java.lang.System.identityHashCode
     _walk(df._jdf.queryExecution().executedPlan(), ident, set(), counts)
+    return counts
+
+
+def executed_exchange_counts(df) -> dict[str, int]:
+    """The exchange counts described in the module docstring, from
+    ``executed_node_counts``."""
+    counts = executed_node_counts(df)
     return {
         "executed": counts["ShuffleExchangeExec"],
         "reused": counts["ReusedExchangeExec"],
