@@ -4,6 +4,19 @@ All driver tables are parquet — the columnar, predicate-pushdown-friendly
 scan path. At 100 TB the same ``spark.read.parquet`` call works against a
 partitioned lake directory; Catalyst handles partition pruning, row-group
 min/max skipping, and column pruning from the declared plan.
+
+Every fixture read goes through ``read_parquet``. Spark's schema
+inference for a parquet path always launches a job to read the footers
+(0.10-0.14 s per read on a warm ``local[4]`` session); a read with a
+declared schema launches none (0.017 s). For a single-file table the
+footer is a few kB, so ``read_parquet`` reads it on the driver with
+pyarrow and declares the schema Spark would have inferred. It falls back
+to inference for a directory (a lake table: its files may drift and
+Spark merges their footers) and for a footer whose types Spark does not
+read the way pyarrow's converter maps them: nanosecond timestamps (Spark
+reads them as ``LongType`` under ``nanosAsLong``), unsigned integers,
+durations, times, dictionaries and anything else outside the checked set
+(``_same_in_spark``).
 """
 
 from __future__ import annotations
@@ -11,6 +24,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -33,7 +47,67 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown fixture table {name!r}; known: {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job when
+    ``path`` is one file whose footer maps to Spark types exactly (module
+    doc); the frame and its schema are the same either way."""
+    schema = footer_schema(spark, path) if os.path.isfile(path) else None
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _same_in_spark(t) -> bool:
+    """True when Spark's parquet reader surfaces arrow type ``t`` as
+    ``from_arrow_type`` converts it."""
+    import pyarrow.types as pat
+
+    if pat.is_timestamp(t):
+        return t.unit in ("ms", "us")
+    if pat.is_list(t) or pat.is_large_list(t):
+        return _same_in_spark(t.value_type)
+    if pat.is_struct(t):
+        return all(_same_in_spark(f.type) for f in t)
+    if pat.is_map(t):
+        return _same_in_spark(t.key_type) and _same_in_spark(t.item_type)
+    return any(
+        check(t)
+        for check in (
+            pat.is_boolean, pat.is_int8, pat.is_int16, pat.is_int32, pat.is_int64,
+            pat.is_float32, pat.is_float64, pat.is_decimal128, pat.is_string,
+            pat.is_large_string, pat.is_binary, pat.is_large_binary, pat.is_date32,
+        )
+    )
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers for the single parquet
+    file ``path``, read from its footer on the driver; ``None`` when Spark
+    would read some column differently from pyarrow's mapping.
+
+    Nullability needs no care: Spark makes a declared file-source schema
+    nullable, as it does an inferred one. Session settings that change the
+    mapping are honoured: NTZ inference decides how a timestamp without a
+    time zone reads, and ``binaryAsString`` sends every read to
+    inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    conf = spark.conf
+    if conf.get("spark.sql.parquet.binaryAsString", "false").lower() == "true":
+        return None
+    try:
+        arrow = pq.read_schema(path)
+    except (OSError, pa.ArrowException):
+        return None  # not a readable parquet footer: let Spark's read say why
+    if not all(_same_in_spark(f.type) for f in arrow):
+        return None
+    ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true").lower() == "true"
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,12 +120,15 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     *scanned* dtype instead of hard-coding one era's physical type — the
     loader contract is the logical schema, not the file encoding. Session
     timezone is pinned to UTC (session.py), so NTZ→TimestampType is a
-    value-preserving cast and matches DuckDB's naive-timestamp reading."""
+    value-preserving cast and matches DuckDB's naive-timestamp reading.
+    A ``timestamp[us]`` file is read with its footer schema (no job); a
+    nanosecond file falls back to inference, which is what applies
+    ``nanosAsLong``."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):
         # nanos-as-long era: floor-convert to micros (DuckDB truncates too).

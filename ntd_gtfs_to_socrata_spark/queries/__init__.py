@@ -16,12 +16,22 @@ value hash):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+# Where queries stage the inputs they synthesize (zip archives, drifted
+# snapshots, partitioned copies): ``.synthetic_fixtures/`` at the root of
+# the checkout this package lives in, so a copy of the repo stages into
+# itself.
+FIXTURE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".synthetic_fixtures",
+)
 
 REGISTRY: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}

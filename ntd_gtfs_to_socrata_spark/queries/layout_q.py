@@ -25,13 +25,14 @@ from the tile id.
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import load_table
-from ntd_gtfs_to_socrata_spark.queries import register
+from ntd_gtfs_to_socrata_spark.queries import FIXTURE_ROOT, register
 
 _BITS = 16  # 16 bits per dimension -> 32-bit Morton key
 
@@ -125,7 +126,7 @@ def lay_zorder_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dynamic partition pruning (runtime partition skipping via a dim filter)
 # ---------------------------------------------------------------------------
 
-_DPP_STAGE = "/root/repo/.synthetic_fixtures/dpp_events"
+_DPP_STAGE = os.path.join(FIXTURE_ROOT, "dpp_events")
 
 DPP_ORACLE = """
 SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS event_date,
@@ -140,8 +141,6 @@ GROUP BY event_date
 def _staged_events_by_day(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per sf dir) a copy of events partitioned by event_date —
     the lake layout whose directories DPP skips at runtime."""
-    import os
-
     target = os.path.join(_DPP_STAGE, os.path.basename(sf_dir.rstrip("/")))
     if not os.path.exists(os.path.join(target, "_SUCCESS")):
         ev = load_table(spark, sf_dir, "events").withColumn(

@@ -24,11 +24,11 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ntd_gtfs_to_socrata_spark.queries import register
+from ntd_gtfs_to_socrata_spark.queries import FIXTURE_ROOT, register
 from ntd_gtfs_to_socrata_spark.sinks import HttpBatchSink, RevisionPublisher
 from ntd_gtfs_to_socrata_spark.sources.zip_ingest import read_member_csv, read_zip_blobs
 
-_FIXTURE_DIR = "/root/repo/.synthetic_fixtures/zips"
+_FIXTURE_DIR = os.path.join(FIXTURE_ROOT, "zips")
 
 # The reference's real-world dirty-input matrix (SURVEY.md §5): BOM prefix,
 # quoted/padded cells, missing optional columns, a missing member, a corrupt
@@ -174,7 +174,7 @@ def s9_revision_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S13b: schema-evolution scan (mergeSchema across drifted snapshots)
 # ---------------------------------------------------------------------------
 
-_EVO_STAGE = "/root/repo/.synthetic_fixtures/schema_evo"
+_EVO_STAGE = os.path.join(FIXTURE_ROOT, "schema_evo")
 
 SCHEMA_EVO_ORACLE = """
 WITH merged AS (

@@ -19,21 +19,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ntd_gtfs_to_socrata_spark.io import read_parquet
 from ntd_gtfs_to_socrata_spark.operators import merge as M
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``io._load_events``: normalize ``ts`` to
     session-TZ TimestampType whatever the fixture's physical encoding.
 
     File-stream sources require a user-supplied schema, so probe the
-    *actual* physical schema with a one-off batch read (metadata-only, no
-    data scan) instead of hard-coding one fixture era's encoding — the
-    hard-coded LongType schema silently mis-decoded ``timestamp[us]``
-    fixtures into garbage epoch values (r5 fix, same root cause as the
-    batch loader outage)."""
+    *actual* physical schema instead of hard-coding one fixture era's
+    encoding — the hard-coded LongType schema silently mis-decoded
+    ``timestamp[us]`` fixtures into garbage epoch values (r5 fix, same
+    root cause as the batch loader outage). The probe is
+    ``io.read_parquet``: for a ``timestamp[us]`` file it reads the footer
+    on the driver and launches no job; a nanosecond file falls back to
+    Spark's inference job, which reports ``ts`` as ``LongType`` under
+    ``nanosAsLong``."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
-    physical = spark.read.parquet(path).schema
+    physical = read_parquet(spark, path).schema
     # file-stream sources need a directory; select just events.parquet
     raw = (
         spark.readStream.schema(physical)

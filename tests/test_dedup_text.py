@@ -94,14 +94,17 @@ def test_connected_components_matches_union_find(spark):
     assert got == want
 
 
-def test_connected_components_converges_or_raises(spark):
+def test_connected_components_converges_or_raises(spark, monkeypatch):
     """A graph whose diameter exceeds the iteration budget must RAISE, not
     return silently-partial (wrong) component ids; within budget, a path
-    graph converges to one component. (r4/r5 verdict carry-over.)"""
+    graph converges to one component. (r4/r5 verdict carry-over.) The
+    small-graph bound is patched to 0 so both graphs take the loop."""
     import pytest
 
+    from ntd_gtfs_to_socrata_spark.operators import graph as G
     from ntd_gtfs_to_socrata_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(G, "_SMALL_GRAPH_EDGES", 0)
     long_path = spark.createDataFrame(
         [(i, i + 1) for i in range(1000)], "src long, dst long"
     )
@@ -114,6 +117,22 @@ def test_connected_components_converges_or_raises(spark):
     got = connected_components(short_path, max_iterations=15).collect()
     assert {r["component_id"] for r in got} == {0}
     assert len(got) == 9
+
+
+def test_connected_components_small_graph_ignores_round_budget(spark):
+    """Under the small-graph bound the 1,000-edge chain that exhausts a
+    3-round loop budget is solved on the driver: one component, labeled
+    by its minimum id, with no rounds to run out of."""
+    from ntd_gtfs_to_socrata_spark.operators import graph as G
+
+    long_path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1000)], "src long, dst long"
+    )
+    assert 2 * 1000 <= G._SMALL_GRAPH_EDGES
+    got = G.connected_components(long_path, max_iterations=3).collect()
+    assert len(got) == 1001
+    assert {r["node"] for r in got} == set(range(1001))
+    assert {r["component_id"] for r in got} == {0}
 
 
 def test_star_cc_matches_union_find(spark):

@@ -83,11 +83,16 @@ def test_cc_star_and_pagerank_match_local_mode(spark, reliable_dir):
     assert reliable_pr == local_pr
 
 
-def test_cc_superseded_checkpoints_deleted(spark, reliable_dir):
+def test_cc_superseded_checkpoints_deleted(spark, reliable_dir, monkeypatch):
     """r11 ADVICE: each round's checkpoint must supersede the previous
     round's — after convergence only the still-referenced frames (bidir,
     seed labels' successor chain tail) may remain, so the rdd-* dir count
     is bounded by a constant, not the round count."""
+    from ntd_gtfs_to_socrata_spark.operators import graph as G
+
+    # the chain would be solved on the driver without rounds; a bound of
+    # 0 forces the loop whose checkpoints this test counts
+    monkeypatch.setattr(G, "_SMALL_GRAPH_EDGES", 0)
     # a 9-node chain needs ~8 propagation rounds — enough that leaked
     # per-round checkpoints would dominate the count
     rows = [(i, i + 1) for i in range(1, 9)]
@@ -106,6 +111,4 @@ def test_cc_superseded_checkpoints_deleted(spark, reliable_dir):
     # r12 ADVICE: the GC's broad except counts swallowed failures — if a
     # Spark upgrade breaks the private accessors, cleanup attempts raise
     # and this counter (not just the dir count above) pinpoints it
-    from ntd_gtfs_to_socrata_spark.operators import graph as G
-
     assert G.SKIPPED_CHECKPOINT_CLEANUPS == 0

@@ -222,6 +222,52 @@ def test_connected_components_law(spark, edges):
     assert got == want
 
 
+LONG_IDS = st.one_of(st.none(), st.integers(min_value=0, max_value=9))
+STRING_IDS = st.one_of(st.none(), st.text(alphabet="aZé中", max_size=2))
+
+
+def _with_repeats(edges):
+    """The edges plus reversed and duplicated copies of the first few."""
+    return edges + [(b, a) for a, b in edges[:3]] + edges[:2]
+
+
+CC_GRAPHS = st.one_of(
+    st.tuples(
+        st.just("long"), st.lists(st.tuples(LONG_IDS, LONG_IDS), max_size=12).map(_with_repeats)
+    ),
+    st.tuples(
+        st.just("string"),
+        st.lists(st.tuples(STRING_IDS, STRING_IDS), max_size=12).map(_with_repeats),
+    ),
+)
+
+
+@slow
+@given(graph=CC_GRAPHS)
+def test_cc_driver_path_equals_loop_law(spark, graph):
+    """The small-graph driver solve ≡ the min-label loop (forced by a
+    bound of 0): the same rows, duplicates included, and the same schema
+    — over self-loops, duplicate and reversed edges, NULL endpoints (one
+    ``(NULL, NULL)`` row, joined to no component) and ``long`` and
+    ``string`` ids (string minima in Spark's binary order)."""
+    from collections import Counter
+
+    from ntd_gtfs_to_socrata_spark.operators import graph as G
+
+    id_type, edges = graph
+    df = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}")
+    driver = G.connected_components(df)
+    bound = G._SMALL_GRAPH_EDGES
+    G._SMALL_GRAPH_EDGES = 0
+    try:
+        loop = G.connected_components(df)
+        want = Counter(map(tuple, loop.collect()))
+    finally:
+        G._SMALL_GRAPH_EDGES = bound
+    assert driver.schema == loop.schema
+    assert Counter(map(tuple, driver.collect())) == want
+
+
 @slow
 @given(edges=EDGES)
 def test_cc_star_equals_propagation_law(spark, edges):

@@ -254,3 +254,14 @@ def test_webdataset_shards_hard_bounded_even_with_skewed_keys(spark, sf_dir):
     assert len({r["shard_id"] for r in rows}) == len(rows)  # ids unique
     # round trip is lossless regardless of the chunking
     assert parse_webdataset(shards).count() == n_docs
+
+
+def test_synthetic_fixture_dirs_follow_the_checkout():
+    """Queries stage their synthesized inputs under the checkout they are
+    imported from, so a copy of the repo writes into itself."""
+    from ntd_gtfs_to_socrata_spark.queries import FIXTURE_ROOT, layout_q, sources_sinks_q
+
+    root = Path(__file__).resolve().parents[1] / ".synthetic_fixtures"
+    assert Path(FIXTURE_ROOT) == root
+    for staged in (sources_sinks_q._FIXTURE_DIR, sources_sinks_q._EVO_STAGE, layout_q._DPP_STAGE):
+        assert Path(staged).parent == root
