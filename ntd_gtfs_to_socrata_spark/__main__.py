@@ -26,6 +26,7 @@ import uuid
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from ntd_gtfs_to_socrata_spark.operators.stagecache import release, stage_boundary
 from ntd_gtfs_to_socrata_spark.plans.catalog_sync import route_catalog
 from ntd_gtfs_to_socrata_spark.plans.run_log import (
     CATALOG_ACTIONS,
@@ -64,16 +65,20 @@ def run_catalog(spark, feeds_path: str, catalog_path: str, out: str, public: boo
     return 0
 
 
+_STOPS_SCOPE = "stops_map_stops"
+
+
 def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
     # feed identity = archive basename (the reference keys feeds by the
     # FeedID that selected each zip; file-based runs use the filename).
     # The archives are decoded in Python (mapInPandas), so every branch
     # below (snapshot, quarantine, changelog) reads this run's cached
     # decode instead of re-extracting the zips.
-    stops_raw = (
-        read_stops_from_zips(spark, zips_glob)
-        .withColumn("feed_id", F.regexp_extract(F.col("path"), r"([^/]+)\.zip$", 1))
-        .persist()
+    stops_raw = stage_boundary(
+        read_stops_from_zips(spark, zips_glob).withColumn(
+            "feed_id", F.regexp_extract(F.col("path"), r"([^/]+)\.zip$", 1)
+        ),
+        _STOPS_SCOPE,
     )
     state_path = os.path.join(state_dir, "stops_state")
     # two-phase swap via a run-unique staging dir: write the new snapshot
@@ -110,7 +115,7 @@ def run_stops_map(spark, zips_glob: str, state_dir: str, out: str) -> int:
         summary = summary_row(spark, changelog_obs.get, STOPS_ACTIONS, run_successful=True)
         _write(summary, os.path.join(out, "run_log"), "append")
     finally:
-        stops_raw.unpersist()
+        release(_STOPS_SCOPE)
         if not keep_staging:
             shutil.rmtree(staging, ignore_errors=True)
     counts = res.sync_counts.get

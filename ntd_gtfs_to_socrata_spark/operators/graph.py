@@ -35,15 +35,8 @@ Scale posture per round:
   hash-partitioned on the node key, so successive rounds reuse partitioning.
 - labels are (long, long) pairs — the shuffle payload is 16 bytes/row no
   matter how wide the documents are.
-- ``_truncate`` cuts lineage each round; without it the plan doubles
-  every iteration and the driver OOMs planning round ~15. It uses fast
-  ``localCheckpoint`` by default and RELIABLE ``checkpoint()`` whenever
-  the session has a checkpoint dir configured
-  (``spark.sparkContext.setCheckpointDir``): localCheckpoint blocks
-  live in executor storage, so on a real cluster one lost executor
-  mid-loop kills the whole job — a 100 TB run sets the dir and every
-  iterative operator in this module switches to DFS-backed
-  truncation automatically.
+- ``stagecache.checkpoint`` cuts lineage each round (local or reliable,
+  see that module), each round's checkpoint superseding the last.
 - convergence is detected by counting the labels a round lowers (a
   neighbor's label below the node's own): a round that lowers none IS
   the fixpoint — and the count rides the checkpoint job as an
@@ -61,71 +54,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _truncate(df: DataFrame, supersedes: DataFrame | None = None) -> DataFrame:
-    """Lineage truncation for iterative loops: reliable ``checkpoint()``
-    (DFS-backed; survives executor loss and lets a 1000-executor run
-    recover a mid-loop failure from storage) when the session has a
-    checkpoint dir configured, else eager ``localCheckpoint`` (fast;
-    blocks live in executor memory/disk — correct on local[*] and the
-    right default when no dir is set, since ``checkpoint()`` without a
-    dir raises). ``observe()`` metrics attached upstream fire on either
-    materialization, so the one-job-per-round convergence probe works
-    identically in both modes (pinned by test_graph_reliable_checkpoint).
-
-    ``supersedes`` (r11 ADVICE): the loop-carried frame this result
-    replaces. Once the new checkpoint has materialized (eager=True), the
-    old round's DFS checkpoint is dead weight — Spark only reclaims it
-    via referenceTracking GC with cleanCheckpoints=true, so a long
-    reliable-mode run would otherwise grow checkpoint storage linearly
-    with rounds. The superseded frame's files are deleted here,
-    best-effort; only pass a frame nothing downstream will recompute.
-    """
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir():
-        out = df.checkpoint(eager=True)
-        if supersedes is not None:
-            _drop_checkpoint(supersedes)
-        return out
-    return df.localCheckpoint(eager=True)
-
-
-# Count of _drop_checkpoint attempts that raised (r12 ADVICE item 3): the
-# deletion reaches through private py4j accessors, so a Spark upgrade that
-# renames them would silently turn GC into a no-op behind the broad except
-# — this counter makes that regression observable outside the unit test
-# (assert it stays 0 after a loop, or alert on growth in a long run).
-SKIPPED_CHECKPOINT_CLEANUPS = 0
-
-
-def _drop_checkpoint(df: DataFrame) -> None:
-    """Best-effort delete of a SUPERSEDED reliable checkpoint's files.
-
-    The checkpoint path lives on the LogicalRDD the checkpointed Dataset
-    wraps; a frame whose analyzed plan is NOT a bare LogicalRDD (never
-    reliably checkpointed, or a projection OVER a live checkpoint — e.g.
-    pagerank's round-0 ranks = nodes.select(...), whose underlying
-    checkpoint must NOT be freed) is the documented no-op, checked by
-    class BEFORE touching rdd() so it never lands in the failure count.
-    Actual deletion failures are swallowed (cleanup must never fail the
-    loop) but COUNTED in SKIPPED_CHECKPOINT_CLEANUPS so a silent API
-    drift is observable."""
-    global SKIPPED_CHECKPOINT_CLEANUPS
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return  # nothing of its own to free
-        opt = plan.rdd().getCheckpointFile()
-        if not opt.isDefined():
-            return
-        path = opt.get()
-        sc = df.sparkSession.sparkContext
-        jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
-    except Exception:  # noqa: BLE001 — cleanup is advisory by design
-        SKIPPED_CHECKPOINT_CLEANUPS += 1
-        return
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 
 
 # Largest distinct directed edge set (both directions of every input
@@ -252,7 +181,7 @@ def connected_components(
         .select("e.u", "e.v")
         .distinct()
         .observe(size, F.count(F.lit(1)).alias("n"))
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     if (
         size.get["n"] <= _SMALL_GRAPH_EDGES
@@ -263,7 +192,7 @@ def connected_components(
         bidir.select(F.col("u").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     converged = False
     # NOTE (r14, measured and REJECTED): fusing TWO propagation steps per
@@ -301,7 +230,7 @@ def connected_components(
                     F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
                 ).alias("label"),
             )
-            .transform(lambda d, prev=labels: _truncate(d, supersedes=prev))
+            .transform(lambda d, prev=labels: checkpoint(d, supersedes=prev))
         )
         if obs.get["lowered"] == 0:
             converged = True
@@ -364,16 +293,16 @@ def pagerank(
     e = (
         edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     outdeg = e.groupBy("e_src").agg(F.count(F.lit(1)).alias("outdeg"))
     # out-degree joined ONCE and carried on the edge row — each iteration
     # then needs only the rank join, not a rank join plus a degree join
-    e_deg = e.join(outdeg, "e_src").transform(_truncate)
+    e_deg = e.join(outdeg, "e_src").transform(checkpoint)
     nodes = (
         e.select(F.explode(F.array("e_src", "e_dst")).alias("node"))
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     ranks = nodes.select("node", F.lit(1.0).alias("rank"))
     # the last CHECKPOINTED rank frame — with a cadence > 1 the frame a
@@ -394,15 +323,16 @@ def pagerank(
             ).alias("rank"),
         )
         if (i + 1) % trunc_every == 0 and i < iterations - 1:
-            ranks = _truncate(ranks, supersedes=last_ckpt)
+            ranks = checkpoint(ranks, supersedes=last_ckpt)
             last_ckpt = ranks
     return ranks
 
 
-def _large_star(e: DataFrame) -> DataFrame:
+def _large_star(e: DataFrame, moved: Observation) -> DataFrame:
     """Large-star: every node u links its STRICTLY LARGER neighbors to the
     minimum of its closed neighborhood min(Γ⁺(u)). Preserves connectivity;
-    strictly reduces edge "height". One shuffle join + one agg."""
+    strictly reduces edge "height". One shuffle join + one agg. ``moved``
+    counts the edges it rewires (u is not its neighborhood's minimum)."""
     bidir = (
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -412,20 +342,25 @@ def _large_star(e: DataFrame) -> DataFrame:
     return (
         bidir.join(mins, "u")
         .filter(F.col("v") > F.col("u"))
+        .observe(moved, F.count_if(F.col("mn") < F.col("u")).alias("n"))
         .select(F.col("v").alias("u"), m.alias("v"))
         .distinct()
     )
 
 
-def _small_star(e: DataFrame) -> DataFrame:
+def _small_star(e: DataFrame, moved: Observation) -> DataFrame:
     """Small-star: orient each edge high→low; every high node links all its
     smaller neighbors (and itself) to their minimum. Completes the
-    star-collapse the large-star set up. One shuffle join + one agg."""
+    star-collapse the large-star set up. One shuffle join + one agg.
+    ``moved`` counts the edges it rewires (v is not u's smallest
+    neighbor)."""
     hi_lo = e.select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
     ).distinct()
     mins = hi_lo.groupBy("u").agg(F.min("v").alias("mn"))
-    linked = hi_lo.join(mins, "u")
+    linked = hi_lo.join(mins, "u").observe(
+        moved, F.count_if(F.col("v") != F.col("mn")).alias("n")
+    )
     to_min = linked.select(F.col("v").alias("u"), F.col("mn").alias("v"))
     self_link = mins.select("u", F.col("mn").alias("v"))
     return to_min.unionByName(self_link).filter(F.col("u") != F.col("v")).distinct()
@@ -459,43 +394,36 @@ def connected_components_star(
     # producer, the union inside all_nodes twice over)
     base = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
-    ).transform(_truncate)
+    ).transform(checkpoint)
+    # an empty edge set needs no rounds (and would run its rewire probes
+    # under plans AQE prunes to empty relations, which report no metrics)
+    size = Observation(f"ccstar_edges_{uuid.uuid4().hex[:8]}")
     e = (
         base.filter(F.col("u") != F.col("v"))
         .distinct()
-        .transform(_truncate)
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        .transform(checkpoint)
     )
     # every node that appears anywhere, including isolated self-loop nodes
     all_nodes = (
         base.select(F.explode(F.array("u", "v")).alias("node"))
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
-    converged = False
-    prev_sig = None
+    converged = size.get["n"] == 0
     for i in range(max_iterations):
-        # fixpoint when the (count, sum(u), sum(v)) signature stops moving:
-        # star rounds only rewire edges downward, so an unchanged signature
-        # means an unchanged edge set. The signature rides the checkpoint
-        # job via observe() (metrics fire on eager materialization) — one
-        # job per round, no separate scalar-agg scan
-        obs = Observation(f"ccstar_round_{i}_{uuid.uuid4().hex[:8]}")
-        e = (
-            _small_star(_large_star(e))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("u").alias("su"),
-                F.sum("v").alias("sv"),
-            )
-            .transform(lambda d, prev=e: _truncate(d, supersedes=prev))
-        )
-        got = obs.get
-        sig = (got["n"], got["su"], got["sv"])
-        if sig == prev_sig:
-            converged = True
+        if converged:
             break
-        prev_sig = sig
+        # fixpoint when a round rewires no edge: its output is then its
+        # input, oriented high→low. Both steps count their rewired edges
+        # via observe() on the round's checkpoint job (metrics fire on
+        # eager materialization) — one job per round, no separate scan,
+        # and a count works for any orderable id type and cannot overflow
+        tag = f"{i}_{uuid.uuid4().hex[:8]}"
+        large = Observation(f"ccstar_large_{tag}")
+        small = Observation(f"ccstar_small_{tag}")
+        e = checkpoint(_small_star(_large_star(e, large), small), supersedes=e)
+        converged = large.get["n"] == 0 and small.get["n"] == 0
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not converge within "
@@ -546,12 +474,12 @@ def label_propagation(
     if trunc_every < 1:
         raise ValueError(f"trunc_every must be >= 1, got {trunc_every}")
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).distinct()
-    e = e.transform(_truncate)
+    e = e.transform(checkpoint)
     nodes = (
         e.select(F.col("e_src").alias("node"))
         .unionByName(e.select(F.col("e_dst").alias("node")))
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     labels = nodes.select("node", F.col("node").alias("label"))
     last_ckpt: DataFrame | None = None
@@ -575,7 +503,7 @@ def label_propagation(
             F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
         )
         if (i + 1) % trunc_every == 0 and i < iterations - 1:
-            labels = _truncate(labels, supersedes=last_ckpt)
+            labels = checkpoint(labels, supersedes=last_ckpt)
             last_ckpt = labels
     return labels
 
@@ -603,7 +531,7 @@ def k_core(
     super-linear on deep graphs (9.9× wall at 10× data in the r8 sf1
     sweep; rounds grow with graph depth).
 
-    Loop contract as ``connected_components``: ``localCheckpoint``
+    Loop contract as ``connected_components``: ``checkpoint``
     truncates lineage; the fixpoint probe (peel set empty) rides the
     DEGREE checkpoint one step ahead as an ``observe()`` metric — each
     deg materialization reports how many of its rows are already < k, so
@@ -638,7 +566,7 @@ def k_core(
         )
         .select("e.s", "e.d")
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     # the ONE full-edge-set aggregation; every later round touches only
     # delta edges and the node-sized degree table. The fixpoint probe
@@ -660,7 +588,7 @@ def k_core(
             F.count(F.lit(1)).alias("n_nodes"),
             F.sum((F.col("deg") < k).cast("int")).alias("n_low"),
         )
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     seed_metrics = obs0.get
     if max_iterations is None:
@@ -697,14 +625,14 @@ def k_core(
                 (F.col("deg") - F.coalesce(F.col("lost"), F.lit(0))).alias("deg"),
             )
             .observe(obs, F.sum((F.col("deg") < k).cast("int")).alias("n_low"))
-            .transform(lambda d, prev=deg: _truncate(d, supersedes=prev))
+            .transform(lambda d, prev=deg: checkpoint(d, supersedes=prev))
         )
         # shrink the surviving edge set (map-side with a broadcast low;
         # needed so later delta joins see only surviving edges)
         e = (
             e.join(low, "s", "left_anti")
             .join(low_d, "d", "left_anti")
-            .transform(lambda d, prev=e: _truncate(d, supersedes=prev))
+            .transform(lambda d, prev=e: checkpoint(d, supersedes=prev))
         )
         n_low = obs.get["n_low"] or 0
     raise RuntimeError(
@@ -741,7 +669,7 @@ def hits(
 
     Scale posture per iteration: one edge⋈score shuffle join + one
     node-keyed aggregation per direction — identical shape to
-    ``pagerank`` (score state is 16 bytes/node; ``localCheckpoint``
+    ``pagerank`` (score state is 16 bytes/node; ``checkpoint``
     truncates lineage). Values grow like (max degree)^iterations, so the
     BIGINT budget bounds iterations at ~4 for web-scale degrees — HITS
     converges in spirit by then, and the fixed count is what makes the
@@ -757,12 +685,12 @@ def hits(
     e = (
         edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     nodes = (
         e.select(F.explode(F.array("e_src", "e_dst")).alias("node"))
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     hub = nodes.select("node", F.lit(1).cast("long").alias("h"))
     auth = None
@@ -778,7 +706,7 @@ def hits(
                 "node",
                 F.coalesce(F.col("a_sum"), F.lit(0)).cast("long").alias("a"),
             )
-            .transform(lambda d, prev=auth: _truncate(d, supersedes=prev))
+            .transform(lambda d, prev=auth: checkpoint(d, supersedes=prev))
         )
         h_out = (
             e.join(auth, e.e_dst == auth.node)
@@ -791,7 +719,7 @@ def hits(
                 "node",
                 F.coalesce(F.col("h_sum"), F.lit(0)).cast("long").alias("h"),
             )
-            .transform(lambda d, prev=hub: _truncate(d, supersedes=prev))
+            .transform(lambda d, prev=hub: checkpoint(d, supersedes=prev))
         )
     return nodes.join(auth, "node").join(hub, "node").select(
         "node",
@@ -836,11 +764,11 @@ def bfs_distances(
         )
         .select("e.s", "e.d")
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     dist = seeds.select(
         F.col(seeds.columns[0]).alias("node"), F.lit(0).cast("int").alias("dist")
-    ).transform(_truncate)
+    ).transform(checkpoint)
     last_ckpt: DataFrame | None = None
     for i in range(max_hops):
         # relax only the RIM — nodes first reached in round i (dist == i).
@@ -864,7 +792,7 @@ def bfs_distances(
             ).alias("dist"),
         )
         if (i + 1) % 2 == 0 and i < max_hops - 1:
-            dist = _truncate(dist, supersedes=last_ckpt)
+            dist = checkpoint(dist, supersedes=last_ckpt)
             last_ckpt = dist
     return dist
 
@@ -903,13 +831,13 @@ def bfs_distances_per_seed(
         )
         .select("e.s", "e.d")
         .distinct()
-        .transform(_truncate)
+        .transform(checkpoint)
     )
     dist = seeds.select(
         F.col(seeds.columns[0]).alias("seed"),
         F.col(seeds.columns[0]).alias("node"),
         F.lit(0).cast("int").alias("dist"),
-    ).transform(_truncate)
+    ).transform(checkpoint)
     last_ckpt: DataFrame | None = None
     for i in range(max_hops):
         # rim-only relaxation, per seed — the ``bfs_distances`` argument
@@ -937,6 +865,6 @@ def bfs_distances_per_seed(
         # fixed-hop loop — truncate every second round, never the final
         # one (the ``bfs_distances`` rationale)
         if (i + 1) % 2 == 0 and i < max_hops - 1:
-            dist = _truncate(dist, supersedes=last_ckpt)
+            dist = checkpoint(dist, supersedes=last_ckpt)
             last_ckpt = dist
     return dist

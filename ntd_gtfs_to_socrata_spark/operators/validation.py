@@ -75,7 +75,8 @@ def split_valid_invalid(
     source is read once per branch. That is cheap for a codegen'd scan with
     the predicate pushed down; a Python-decoded source (``mapInPandas``,
     e.g. ``sources.zip_ingest``) would be decoded again per branch, so the
-    caller should persist it first (as ``run_stops_map`` does).
+    caller should cache it first (``stagecache.stage_boundary``, as
+    ``run_stops_map`` does).
 
     Returns (clean, quarantine).
     """

@@ -28,24 +28,25 @@ shingle-key shuffle with the eval side distinct-reduced first; split =
 map-side md5). The write partitions by split so every downstream trainer
 scans only its slice.
 
-Cache lifecycle (r6 ADVICE): the two stage boundaries are ``persist()``ed
-so the 3-consumer branches don't re-run rules+dedup. Each
-``build_release`` tracks its persisted frames in the result's ``cached``
-list; ``write_release`` (and ``CorpusReleaseResult.close()``) unpersist
-them, and a new build retires any still-live predecessor's caches first —
-so repeated invocations in one session (oracle gate, bench passes) hold
-at most ONE build's stages in executor memory.
+Cache lifecycle (r6 ADVICE): the two stage boundaries are
+``stagecache.stage_boundary`` scopes, so the 3-consumer branches don't
+re-run rules+dedup. A new build retires the previous build's frames
+when it re-enters the scopes, and ``write_release`` (or
+``CorpusReleaseResult.close()``) releases them — so repeated invocations
+in one session (oracle gate, bench passes) hold at most ONE build's
+stages in executor memory.
 """
 
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
+from ntd_gtfs_to_socrata_spark.operators.stagecache import release, stage_boundary
 
 # Candidate-generation document-frequency cap: a shingle appearing in more
 # than this many surviving docs is boilerplate, not dup evidence — dropping
@@ -61,27 +62,15 @@ class CorpusReleaseResult:
     released: DataFrame  # doc_id, text, lang, source, split
     manifest: dict  # per-stage counts (filled after an action runs)
     observations: dict  # name -> Observation (driver reads post-action)
-    cached: list = field(default_factory=list)  # persisted stage frames
 
     def close(self) -> None:
-        """Unpersist the stage-boundary caches (idempotent)."""
-        while self.cached:
-            df = self.cached.pop()
-            df.unpersist()
-            if df in _LIVE_STAGES:
-                _LIVE_STAGES.remove(df)
+        """Release the stage-boundary caches (idempotent)."""
+        for scope in STAGE_SCOPES:
+            release(scope)
 
 
-# Stage frames persisted by builds whose result hasn't been close()d yet;
-# the next build retires them so the query/bench path (which must return a
-# LAZY frame and therefore cannot close before the caller's action) never
-# accumulates more than one build's caches.
-_LIVE_STAGES: list[DataFrame] = []
-
-
-def _retire_predecessor_stages() -> None:
-    while _LIVE_STAGES:
-        _LIVE_STAGES.pop().unpersist()
+# the stage_boundary scopes of a build's two stage frames
+STAGE_SCOPES = ("corpus_release_exact", "corpus_release_neardup")
 
 
 def _keep_rules(docs: DataFrame) -> DataFrame:
@@ -130,7 +119,6 @@ def build_release(
 
     if cc_algorithm not in ("propagation", "star"):
         raise ValueError(f"unknown cc_algorithm: {cc_algorithm!r}")
-    _retire_predecessor_stages()
     docs = load_table(spark, sf_dir, "documents")
     # Observation names are session-unique; suffix so repeated builds in
     # one session (idempotency tests, retries) don't collide
@@ -139,7 +127,6 @@ def build_release(
         k: Observation(f"{k}_{run_id}")
         for k in ("input", "ruled", "exact", "neardup", "decon")
     }
-    cached: list[DataFrame] = []
 
     staged = docs.observe(obs["input"], F.count(F.lit(1)).alias("n"))
     ruled = _keep_rules(staged).observe(obs["ruled"], F.count(F.lit(1)).alias("n"))
@@ -149,19 +136,18 @@ def build_release(
     canon = ruled.groupBy(F.sha2("text", 256).alias("h")).agg(
         F.min("doc_id").alias("doc_id")
     )
-    exact = (
-        ruled.join(canon.select("doc_id"), "doc_id", "left_semi")
-        .observe(obs["exact"], F.count(F.lit(1)).alias("n"))
-        # stage boundary: exact survivors feed the shingle index, the
-        # keep-one anti-join AND the decontamination tagging — without a
-        # materialization each branch re-runs rules+dedup (the SCALE.md
-        # "subtree recompute" class). At 100 TB this is a checkpoint to
-        # the lake between stages; locally persist() — unlike
-        # localCheckpoint, the lineage stays a SQL plan, so the stage
-        # observe counters still fire in the write action.
-        .persist()
+    # stage boundary: exact survivors feed the shingle index, the
+    # keep-one anti-join AND the decontamination tagging — without a
+    # materialization each branch re-runs rules+dedup (the SCALE.md
+    # "subtree recompute" class). A lazy persist, not an eager
+    # checkpoint: the lineage stays a SQL plan, so the stage observe
+    # counters still fire in the write action.
+    exact = stage_boundary(
+        ruled.join(canon.select("doc_id"), "doc_id", "left_semi").observe(
+            obs["exact"], F.count(F.lit(1)).alias("n")
+        ),
+        STAGE_SCOPES[0],
     )
-    cached.append(exact)
 
     # near-dup keep-one over the survivors: df-capped shared-shingle pairs
     # (hashed keys, map-side i<j combos) -> jaccard >= t -> CC -> keep min
@@ -215,14 +201,14 @@ def build_release(
         .filter(F.col("doc_id") != F.col("keep"))
         .select("doc_id")
     )
-    neardup = (
-        exact.join(drop, "doc_id", "left_anti")
-        .observe(obs["neardup"], F.count(F.lit(1)).alias("n"))
-        # second stage boundary: survivors feed eval-shingle extraction,
-        # train-shingle extraction, and the release base (3 branches)
-        .persist()
+    # second stage boundary: survivors feed eval-shingle extraction,
+    # train-shingle extraction, and the release base (3 branches)
+    neardup = stage_boundary(
+        exact.join(drop, "doc_id", "left_anti").observe(
+            obs["neardup"], F.count(F.lit(1)).alias("n")
+        ),
+        STAGE_SCOPES[1],
     )
-    cached.append(neardup)
 
     # decontamination: eval slice = md5 bucket >= 98 (tp_hash_split's
     # held-out convention); drop any train doc sharing a shingle with it
@@ -254,10 +240,7 @@ def build_release(
         F.when(bucket < 80, "train").when(bucket < 90, "validation").otherwise("test")
     )
     released = decon.withColumn("split", split)
-    _LIVE_STAGES.extend(cached)
-    return CorpusReleaseResult(
-        released=released, manifest={}, observations=obs, cached=cached
-    )
+    return CorpusReleaseResult(released=released, manifest={}, observations=obs)
 
 
 def write_release(result: CorpusReleaseResult, out_dir: str) -> dict:

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import ensure_min_parallelism, load_table
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
-from ntd_gtfs_to_socrata_spark.operators.stagecache import stage_boundary
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint, stage_boundary
 from ntd_gtfs_to_socrata_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -2651,13 +2651,13 @@ def dedup_containment_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per iteration — WITHOUT a materialization each reference re-executes
     # the whole inverted-index pipeline (measured: 12.2 s at sf0.1 vs
     # 2.0 s for the single-pass dedup_containment). An eager
-    # localCheckpoint (not persist): the UnionLoop re-plans its step per
+    # checkpoint (not persist): the UnionLoop re-plans its step per
     # iteration, and a persisted view re-enters the plan as an
     # InMemoryRelation whose CACHED-SCAN STAGES are re-instantiated every
     # round — measured at sf0.1: 74 stages / 1059 tasks with persist vs
     # 29 / 239 with the checkpoint + broadcast below (r14; jobs 19 both
     # ways — the iteration count is the chain depth, fixed by the data).
-    edges = edges.localCheckpoint(eager=True)
+    edges = checkpoint(edges)
     edges.createOrReplaceTempView("contain_edges_rsql")
     # BROADCAST the loop-static edge side: each recursive step probes the
     # frontier map-side instead of shuffling both sides 32-ways per round.
@@ -2950,7 +2950,7 @@ def dq_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = (
         j.groupBy("lang", "source")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     n = cell.agg(F.sum("c").alias("n"))
     ra = cell.groupBy("lang").agg(F.sum("c").alias("a"))

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import load_table
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -797,7 +798,7 @@ def er_em_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("g_name", "g_bal", "g_seg")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
     params = spark.range(1).select(

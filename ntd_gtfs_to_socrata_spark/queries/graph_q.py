@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 from ntd_gtfs_to_socrata_spark.queries.dedup_text import (
     AUDIT_DF_CAP,
@@ -116,13 +117,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     clumps are degree-bounded anyway.
 
     The edge set feeds THREE join legs; it is materialized once
-    (``localCheckpoint``) so the upstream pair pipeline isn't recomputed
+    (``checkpoint``) so the upstream pair pipeline isn't recomputed
     per leg — the same share-don't-recompute posture every iterative
     operator here uses."""
     pairs = (
         _ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP)
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     e1 = pairs.alias("e1")
     e2 = pairs.alias("e2")
@@ -253,7 +254,7 @@ def graph_canonical_by_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three aggregation legs (best / members / winners) and is likewise
     # checkpointed (it's a per-node frame of the near-dup subgraph —
     # small by construction)
-    pairs = _ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP).localCheckpoint(eager=True)
+    pairs = checkpoint(_ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP))
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(
@@ -268,7 +269,7 @@ def graph_canonical_by_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = (
         cc.join(pr, cc.node == F.col("pnode"))
         .select("comp", "node", "pr")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     best = joined.groupBy("comp").agg(F.max("pr").alias("max_pr"))
     members = joined.groupBy("comp").agg(F.count(F.lit(1)).alias("n_members"))
@@ -603,7 +604,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         sim_neardup_pairs(spark, sf_dir)
         .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     edges = pairs.select(
         F.explode(
@@ -782,7 +783,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         _ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     edges = pairs.select(
         F.explode(
@@ -792,9 +793,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    labels = label_propagation(edges, iterations=_LPA_ITERS).localCheckpoint(
-        eager=True
-    )
+    labels = checkpoint(label_propagation(edges, iterations=_LPA_ITERS))
     la = labels.select(F.col("node").alias("doc_a"), F.col("label").alias("lab_a"))
     lb = labels.select(F.col("node").alias("doc_b"), F.col("label").alias("lab_b"))
     internal = (
@@ -898,7 +897,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         _ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     edges = pairs.select(
         F.explode(

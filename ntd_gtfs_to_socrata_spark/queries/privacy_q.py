@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import load_table
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 
 _K = 5
@@ -311,7 +312,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pv = cust.groupBy("c_nationkey", "bal_band", "c_mktsegment").agg(
         F.count(F.lit(1)).alias("nv")
-    ).localCheckpoint(eager=True)  # feeds both the sizes rollup and the join
+    ).transform(checkpoint)  # feeds both the sizes rollup and the join
     gv = cust.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("big_nv"))
     tot = cust.agg(F.count(F.lit(1)).alias("n"))
     sizes = pv.groupBy("c_nationkey", "bal_band").agg(F.sum("nv").alias("s"))

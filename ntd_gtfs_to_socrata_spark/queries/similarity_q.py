@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import ensure_min_parallelism, load_table
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 
 DIM = 64
@@ -1090,7 +1091,7 @@ def sim_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse assigner) once K outgrows a broadcast. No cross-cell pair is
     ever generated. The corpus count is a one-scalar control-plane job
     (the k-means-centroid collect contract). The assignment is
-    localCheckpointed: three consumers (hi/lo pair sides + the final
+    checkpointed: three consumers (hi/lo pair sides + the final
     keep join) would otherwise re-run the routing per consumer."""
     import math
 
@@ -1170,7 +1171,7 @@ def sim_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first("vn").alias("vn"),
         )
         .select("vec_id", (-F.col("best.neg_id")).alias("centroid_id"), "ve", "vn")
-        .localCheckpoint(eager=True)  # 3 consumers: hi, lo, final keep join
+        .transform(checkpoint)  # 3 consumers: hi, lo, final keep join
     )
     # DataFrame aliases (not column renames off the same lineage): the
     # rename form makes Catalyst miss the centroid_id equi-key and plan a
@@ -1352,7 +1353,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "label", "centroid_id", F.posexplode(subs).alias("s", "rvec")
         )
         .withColumn("rvec_n2", dot(F.col("rvec"), F.col("rvec")))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     cb = resid.filter(F.col("vec_id") < IVFPQ_CODES).select(
         F.col("vec_id").alias("code"),
@@ -1591,7 +1592,7 @@ def sim_nn_descent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         sym0.withColumn("rn", F.row_number().over(w0))
         .filter(F.col("rn") <= _NND_K)
         .select("src", "dst")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     sym = (
         g0.select(
@@ -1873,7 +1874,7 @@ def _gs_search_graph(spark: SparkSession, sf_dir: str):
             _bucket_col(F.col("embedding")).alias("bucket"),
         )
         .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     n = obs.get["n"]
     # global rank by vec_id WITHOUT an unpartitioned window (the scale
@@ -1905,7 +1906,7 @@ def _gs_search_graph(spark: SparkSession, sf_dir: str):
         .select("vec_id", ((F.col("r") + F.col("s")) % n).alias("r2"))
         .join(idmap, "r2")
         .select(F.col("vec_id").alias("src"), F.col("nbr").alias("dst"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     ea = b.select(F.col("vec_id").alias("src"), F.col("e").alias("e_src"))
     ebt = b.select(F.col("vec_id").alias("dst"), F.col("e").alias("e_dst"))
@@ -1941,7 +1942,7 @@ def _gs_search_graph(spark: SparkSession, sf_dir: str):
         sym0.withColumn("rn", F.row_number().over(w0))
         .filter(F.col("rn") <= _GS_NND_K)
         .select("src", "dst")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     for rnd in range(2):  # NN-descent repair rounds
         sym = (
@@ -1961,7 +1962,7 @@ def _gs_search_graph(spark: SparkSession, sf_dir: str):
             y, (F.col("y.src") == F.col("x.dst")) & (F.col("y.dst") != F.col("x.src"))
         ).select(F.col("x.src").alias("src"), F.col("y.dst").alias("dst"))
         cand = twohop.unionByName(g).distinct()
-        g = (
+        nxt = (
             score_edges(cand)
             .withColumn("rn", F.row_number().over(w0))
             .filter(F.col("rn") <= _GS_NND_K)
@@ -1971,9 +1972,8 @@ def _gs_search_graph(spark: SparkSession, sf_dir: str):
         # cand union); the FINAL round's g has exactly one consumer — the
         # union+distinct below — so its checkpoint would be a redundant
         # back-to-back materialization (r14: one job + RDD write saved)
-        if rnd < 1:
-            g = g.localCheckpoint(eager=True)
-    return g.unionByName(ring).distinct().localCheckpoint(eager=True), b
+        g = checkpoint(nxt, supersedes=g) if rnd < 1 else nxt
+    return checkpoint(g.unionByName(ring).distinct()), b
 
 
 @register("sim_graph_search_topk", _graph_search_oracle())
@@ -2036,7 +2036,7 @@ def sim_graph_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     visited = score(
         bucket_seeds.unionByName(fixed).distinct()
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     wb = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("cid").asc())
     for _ in range(_GS_HOPS):
         frontier = (
@@ -2057,7 +2057,7 @@ def sim_graph_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         new = nbrs.join(
             F.broadcast(visited.select("qid", "cid")), ["qid", "cid"], "left_anti"
         )
-        visited = visited.unionByName(score(new)).localCheckpoint(eager=True)
+        visited = checkpoint(visited.unionByName(score(new)), supersedes=visited)
     return (
         visited.filter(F.col("cid") != F.col("qid"))
         .withColumn("rnk", F.row_number().over(wb))
@@ -2324,7 +2324,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps C rows per query through the shuffle); swap in the bucketed
     ANN candidates for the 100 TB path — the MMR stages are agnostic to
     where candidates came from. The k-step loop moves candidate-pool
-    frames only; each step is localCheckpointed so plans stay flat."""
+    frames only; each step is checkpointed so plans stay flat."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("qid"),
@@ -2350,7 +2350,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= _MMR_C)
         .select("qid", "cid", "ce", "cn", "rel")
-        .localCheckpoint(eager=True)  # feeds the pair table + every step
+        .transform(checkpoint)  # feeds the pair table + every step
     )
     a = cands.select("qid", F.col("cid").alias("ca"), F.col("ce").alias("ea"), F.col("cn").alias("na"))
     b = cands.select("qid", F.col("cid").alias("cb"), F.col("ce").alias("eb"), F.col("cn").alias("nb"))
@@ -2361,7 +2361,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid", "ca", "cb",
             F.floor(sim * 1000000 + 0.5).cast("long").alias("sim"),
         )
-        .localCheckpoint(eager=True)  # feeds k-1 penalty stages
+        .transform(checkpoint)  # feeds k-1 penalty stages
     )
     slim = cands.select("qid", "cid", "rel")
     w1 = Window.partitionBy("qid").orderBy(F.col("rel").desc(), F.col("cid").asc())
@@ -2369,7 +2369,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         slim.withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") == 1)
         .select("qid", "cid", F.lit(1).alias("step"), (7 * F.col("rel")).alias("score10"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # loop frames are query-batch-bounded (selected ≤ Q×k rows, pen ≤
     # Q×C) — broadcast them so each step's joins are map-side over the
@@ -2397,5 +2397,5 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("qid", "cid", F.lit(i).alias("step"), score10.alias("score10"))
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=True)
+        selected = checkpoint(selected.unionByName(pick), supersedes=selected)
     return selected

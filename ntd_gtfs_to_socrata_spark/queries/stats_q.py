@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import load_table
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 
 _B = 32  # bootstrap replicates
@@ -426,7 +427,7 @@ def eval_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-order fan-out bounded by C(lines,2) ≤ 21; pair and games
     tables are O(entities²) at worst but O(observed pairs) in practice;
     each MM iteration is two entity-keyed joins + one map-side-combinable
-    integer sum — the pagerank loop shape, with localCheckpoint
+    integer sum — the pagerank loop shape, with a checkpoint
     truncating lineage per round. No window, no collect."""
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"),
@@ -484,11 +485,11 @@ def eval_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("g")
         )
         .select("g.p", "g.o", "g.n", "g.w")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     wins = games.groupBy("p").agg(
         F.sum("w").alias("W"), F.sum("n").alias("G")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     s = wins.select("p", F.lit(1_000_000).cast("long").alias("su"))
     for _ in range(_BT_ITERS):
         sa = s.select(F.col("p").alias("pa"), F.col("su").alias("su_a"))
@@ -505,7 +506,7 @@ def eval_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("q"),
         )
         d = q.groupBy("p").agg(F.sum("q").alias("D"))
-        s = (
+        s = checkpoint(
             wins.join(d, "p")
             .select(
                 "p",
@@ -519,8 +520,8 @@ def eval_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).cast("long")
                 )
                 .alias("su"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            supersedes=s,
         )
     return wins.join(s, "p").select(
         F.col("p").alias("supp_key"),
@@ -769,7 +770,7 @@ def eval_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins = s.groupBy("bin").agg(
         F.sum("a").cast("long").alias("na"),
         F.sum(1 - F.col("a")).cast("long").alias("nb"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     blocked = bins.withColumn("block", F.floor(F.col("bin") / _KS_BLOCK))
     blk_tot = blocked.groupBy("block").agg(
         F.sum("na").alias("blk_na"), F.sum("nb").alias("blk_nb")
@@ -894,7 +895,7 @@ def eval_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins = s.groupBy("bin").agg(
         F.sum("a").cast("long").alias("na"),
         F.sum(1 - F.col("a")).cast("long").alias("nb"),
-    ).localCheckpoint(eager=True)  # feeds block totals + cumulative pass
+    ).transform(checkpoint)  # feeds block totals + cumulative pass
     blocked = bins.withColumn("block", F.floor(F.col("bin") / _MW_BLOCK))
     blk_tot = blocked.groupBy("block").agg(
         F.sum(F.col("na") + F.col("nb")).alias("blk_n")
@@ -1043,7 +1044,7 @@ def eval_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)  # feeds both marginals + the sxy fold
+        .transform(checkpoint)  # feeds both marginals + the sxy fold
     )
 
     def rank_map(col: str) -> DataFrame:

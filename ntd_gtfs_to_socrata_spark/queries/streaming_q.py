@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import load_table
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 from ntd_gtfs_to_socrata_spark.streaming import event_windows as EW
 from ntd_gtfs_to_socrata_spark.streaming import joins as SJ
@@ -49,26 +50,22 @@ FROM events GROUP BY user_id
 @register("stream_stateful_user_totals", USER_TOTALS_ORACLE)
 def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator: per-user running (count, sum) state;
-    final state per user returned. Routed through the stateful_v2
-    dispatcher — transformWithStateInPandas (the current-generation API)
-    when the runtime supports it, applyInPandasWithState otherwise; both
-    paths share the same arithmetic and parity tests.
+    final state per user returned
+    (``streaming/stateful.py::running_user_totals``,
+    applyInPandasWithState).
 
     PROMOTED from rows-only to full value-hash (r12 verdict item 3):
     the streamed values are pre-quantized to integer-valued cent doubles
     (floor(v*100+0.5)), so the processor's running float accumulation is
     EXACT (integers <= 2^53 add associatively in IEEE double) and the
     final state per user equals the batch count/sum bit-for-bit — the
-    second stateful_v2 processor under the oracle, same strength as
-    stream_ewma's power-of-two-exact parity."""
-    from ntd_gtfs_to_socrata_spark.streaming.stateful_v2 import (
-        default_running_user_totals,
-    )
+    same strength as stream_ewma's power-of-two-exact parity."""
+    from ntd_gtfs_to_socrata_spark.streaming.stateful import running_user_totals
 
     stream = EW.read_events_stream(spark, sf_dir).withColumn(
         "value", F.floor(F.col("value") * 100 + 0.5).cast("double")
     )
-    name = _run_to_table(default_running_user_totals(stream), "srut", "update")
+    name = _run_to_table(running_user_totals(stream), "srut", "update")
     return (
         spark.table(name)
         .groupBy("user_id")
@@ -389,14 +386,8 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     strength — and because the alpha=1/2 arithmetic is order-fixed and
     power-of-two exact on both paths, the parity is BIT-exact, not
     rounded (pinned in tests/test_streaming.py): the strongest
-    determinism statement on the streaming surface. Routed through the
-    stateful_v2 dispatcher (transformWithStateInPandas when the runtime
-    supports it, applyInPandasWithState otherwise — identical folds, so
-    the oracle is engine-facility-independent)."""
+    determinism statement on the streaming surface."""
     from ntd_gtfs_to_socrata_spark.streaming import stateful as STF
-    from ntd_gtfs_to_socrata_spark.streaming.stateful_v2 import (
-        default_running_ewma,
-    )
 
     purchases = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
@@ -407,7 +398,7 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(staging)
     )
-    name = _run_to_table(default_running_ewma(stream), "sewma", "update")
+    name = _run_to_table(STF.running_ewma(stream), "sewma", "update")
     return spark.table(name)
 
 
@@ -487,7 +478,7 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left",
         )
         .select("bin", F.coalesce("base_n", F.lit(0)).alias("base_n"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
     import os

@@ -14,10 +14,13 @@ comparison is timezone-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from uuid import uuid4
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import load_table
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -1200,9 +1203,9 @@ def tw_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.unix_micros(F.col("ts")).alias("us"),
     )
-    stage_frames = []
+    counts = []
     prev = None
-    for i, et in enumerate(_FUNNEL_STAGES):
+    for et in _FUNNEL_STAGES:
         if prev is None:
             cur = (
                 e.filter(F.col("event_type") == et)
@@ -1220,10 +1223,10 @@ def tw_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("user_id")
                 .agg(F.min("us").alias("t"))
             )
-        cur = cur.localCheckpoint(eager=True)
-        stage_frames.append(cur)
-        prev = cur
-    counts = [df.count() for df in stage_frames]  # 3 control-plane scalars
+        # the stage's user count rides its checkpoint job
+        n = Observation(f"funnel_{et}_{uuid4().hex[:8]}")
+        prev = checkpoint(cur.observe(n, F.count(F.lit(1)).alias("n")), supersedes=prev)
+        counts.append(n.get["n"])
     first_n = counts[0]
     rows = [
         (i + 1, c, int((c * 1_000_000 + first_n // 2) // first_n) if first_n else 0)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import ensure_min_parallelism, load_table
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 
 # Adjacent character pairs of tok = substr(tok, i, 2) for i in 1..len-1.
@@ -125,60 +126,53 @@ def train_bpe_merges(
     corpus has billions).
     """
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    vocab = (
+    # the vocab-sized state is checkpointed once per round (each round
+    # superseding the last), so iterations re-read materialized state
+    state = checkpoint(
         docs.select(F.explode(TX.tokens(F.col("text"))).alias("tok"))
         .filter(F.length("tok") >= 2)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.concat_ws(" ", F.split("tok", "")).alias("rep"), "n")
-        .persist()
     )
-    vocab.count()  # materialize once; iterations re-read the cached state
     merges = []
-    cached = [vocab]  # every persisted state, released before returning
-    try:
-        state = vocab
-        for rank in range(1, n_merges + 1):
-            pair_counts = (
-                state.select(F.split("rep", " ").alias("syms"), "n")
-                .select(
-                    F.explode(
-                        F.transform(
-                            F.slice(
-                                F.col("syms"), 1, F.size("syms") - 1
-                            ),
-                            lambda x, i: F.struct(
-                                x.alias("left"),
-                                F.element_at(F.col("syms"), i + 2).alias("right"),
-                            ),
-                        )
-                    ).alias("p"),
-                    "n",
-                )
-                .groupBy("p.left", "p.right")
-                .agg(F.sum("n").alias("n_occurrences"))
+    for rank in range(1, n_merges + 1):
+        pair_counts = (
+            state.select(F.split("rep", " ").alias("syms"), "n")
+            .select(
+                F.explode(
+                    F.transform(
+                        F.slice(
+                            F.col("syms"), 1, F.size("syms") - 1
+                        ),
+                        lambda x, i: F.struct(
+                            x.alias("left"),
+                            F.element_at(F.col("syms"), i + 2).alias("right"),
+                        ),
+                    )
+                ).alias("p"),
+                "n",
             )
-            best = pair_counts.orderBy(
-                F.col("n_occurrences").desc(), F.col("left").asc(), F.col("right").asc()
-            ).limit(1).collect()
-            if not best:
-                break
-            left, right, n_occ = best[0]["left"], best[0]["right"], best[0]["n_occurrences"]
-            merges.append((rank, left, right, left + right, n_occ))
-            pattern = f"(?<= |^){_java_quote(left)} {_java_quote(right)}(?= |$)"
-            state = state.select(
+            .groupBy("p.left", "p.right")
+            .agg(F.sum("n").alias("n_occurrences"))
+        )
+        best = pair_counts.orderBy(
+            F.col("n_occurrences").desc(), F.col("left").asc(), F.col("right").asc()
+        ).limit(1).collect()
+        if not best:
+            break
+        left, right, n_occ = best[0]["left"], best[0]["right"], best[0]["n_occurrences"]
+        merges.append((rank, left, right, left + right, n_occ))
+        if rank == n_merges:
+            break  # the last merge's state has no reader
+        pattern = f"(?<= |^){_java_quote(left)} {_java_quote(right)}(?= |$)"
+        state = checkpoint(
+            state.select(
                 F.regexp_replace("rep", pattern, _repl_escape(left + right)).alias("rep"),
                 "n",
-            ).persist()
-            state.count()
-            # previous round's blocks are dead once the new state is
-            # materialized — release them instead of leaking one cached
-            # vocab-sized frame per merge round
-            cached.append(state)
-            cached.pop(0).unpersist()
-    finally:
-        for df in cached:
-            df.unpersist()
+            ),
+            supersedes=state,
+        )
     return spark.createDataFrame(
         merges, "merge_rank int, left string, right string, merged string, n_occurrences bigint"
     )

@@ -24,8 +24,8 @@ so the pipeline can route it to the changelog (INVALID_URLS analog).
 The decode runs in Python and Spark cannot push anything into it, so every
 action on the returned frame re-reads and re-parses every archive. A
 caller with several outputs decodes once per run: ``run_stops_map``
-persists the stops frame before its branches and unpersists it at the end
-of the run.
+makes the stops frame a ``stagecache.stage_boundary`` before its branches
+and releases it at the end of the run.
 """
 
 from __future__ import annotations

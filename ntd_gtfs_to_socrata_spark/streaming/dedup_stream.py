@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import load_table
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
+from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 
 _JACCARD_T = 0.2  # dedup_lsh_pipeline's verification threshold
 _N_BANDS = 4
@@ -280,9 +281,9 @@ class _CompactedState:
             # ever landing in an epoch partition (commit_epoch path)
             full = full.unionByName(extra)
         # snapshot tables are per-run (unique suffix) and overwritten in
-        # place on replay; localCheckpoint breaks the read-from/write-to
+        # place on replay; a checkpoint breaks the read-from/write-to
         # same-table cycle when a previous snapshot feeds the rewrite
-        full = full.localCheckpoint(eager=True)
+        full = checkpoint(full)
         write_bucketed(full, self.table, self.key, n_buckets=_STATE_BUCKETS)
         # fold point + GC scheduling (epoch dirs now covered by the table)
         for entry in sorted(os.listdir(self.base)) if os.path.isdir(self.base) else []:
@@ -343,7 +344,7 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
         bands_state.gc()
         shingles_state.gc()
         # Staging discipline (r10 A/B-tested, keep as is): every reused
-        # frame is an EAGER localCheckpoint. Two alternatives both benched
+        # frame is an EAGER checkpoint. Two alternatives both benched
         # WORSE at sf0.1 — (a) lazy persist() fusing everything into the
         # verify-write job serializes the nested broadcast subtrees
         # (batch_counts → overfull → candidates) instead of running
@@ -372,10 +373,10 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
 
         with _TPE(max_workers=2) as _pool:
             _fb = _pool.submit(
-                lambda: _band_signatures(shingled).localCheckpoint(eager=True)
+                lambda: checkpoint(_band_signatures(shingled))
             )
             _fs = _pool.submit(
-                lambda: _shingle_hashes(shingled).localCheckpoint(eager=True)
+                lambda: checkpoint(_shingle_hashes(shingled))
             )
             bands = _fb.result()
             shingles = _fs.result()
@@ -439,7 +440,7 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
                 return (
                     hist.select("doc_id", "bucket")
                     .join(F.broadcast(batch_counts.select("bucket")), "bucket")
-                    .localCheckpoint(eager=True)
+                    .transform(checkpoint)
                 )
 
             # tail + snapshot member checkpoints are independent jobs —
@@ -473,7 +474,7 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
                     > _BUCKET_CAP
                 )
                 .select("bucket")
-                .localCheckpoint(eager=True)  # reused by both cross joins
+                .transform(checkpoint)  # reused by both cross joins
             )
         _mark("candidates_prep")
 

@@ -17,14 +17,10 @@ watermarks (resp. state timeouts) bound per-key state lifetime.
 
 from __future__ import annotations
 
-# NOTE: Spark 4's successor API (``transformWithStateInPandas`` — ValueState/
-# ListState/MapState + timers) is present in this PySpark build but its
-# state-server protocol requires ``google.protobuf``, which this container
-# does not ship (re-verified r9: the driver worker crashes with ImportError
-# on protobuf descriptor import). ``stateful_v2.py`` carries the ported
-# operators behind a ``tws_available()`` gate — same arithmetic, same
-# batch-parity oracles, exercised by tests the moment protobuf appears;
-# ``applyInPandasWithState`` below is the runnable surface here.
+# NOTE: Spark 4's successor API (``transformWithStateInPandas``) needs
+# ``google.protobuf`` for its state-server protocol; without it the
+# driver worker crashes on import, so ``applyInPandasWithState`` is the
+# stateful surface here.
 
 import atexit
 import os

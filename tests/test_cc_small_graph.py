@@ -17,6 +17,7 @@ from pathlib import Path
 import pytest
 
 from ntd_gtfs_to_socrata_spark.operators import graph as G
+from ntd_gtfs_to_socrata_spark.operators import stagecache
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
@@ -34,17 +35,16 @@ def test_small_graph_cc_launches_its_checkpoint_and_one_collect(spark, monkeypat
     tag = uuid.uuid4().hex[:8]
     ckpt_group, rest_group = f"cc-ckpt-{tag}", f"cc-rest-{tag}"
     truncations = []
-    real_truncate = G._truncate
 
-    def tagged_truncate(df, supersedes=None):
+    def tagged_checkpoint(df, supersedes=None):
         truncations.append(df)
         sc.setJobGroup(ckpt_group, ckpt_group)
         try:
-            return real_truncate(df, supersedes)
+            return stagecache.checkpoint(df, supersedes)
         finally:
             sc.setJobGroup(rest_group, rest_group)
 
-    monkeypatch.setattr(G, "_truncate", tagged_truncate)
+    monkeypatch.setattr(G, "checkpoint", tagged_checkpoint)
     edges = spark.createDataFrame(EDGES, "src long, dst long")
     sc.setJobGroup(rest_group, rest_group)
     try:

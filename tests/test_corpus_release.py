@@ -57,21 +57,27 @@ def test_release_identical_under_star_cc(spark, sf_dir):
 
 def test_release_cache_lifecycle(spark, sf_dir, tmp_path):
     """r6 ADVICE: stage persists must not leak across invocations —
-    write_release unpersists its build's stages, and a new build retires
-    any still-live predecessor's."""
+    write_release releases its build's stage scopes, and a new build
+    retires the previous build's frames."""
+    from ntd_gtfs_to_socrata_spark.operators import stagecache
     from ntd_gtfs_to_socrata_spark.plans import corpus_release as cr
 
+    def live():
+        return [stagecache._LIVE[s] for s in cr.STAGE_SCOPES if s in stagecache._LIVE]
+
     res = build_release(spark, sf_dir)
-    assert len(res.cached) == 2 and len(cr._LIVE_STAGES) == 2
+    assert len(live()) == 2 and all(df.is_cached for df in live())
     write_release(res, str(tmp_path / "rel"))
-    assert res.cached == [] and cr._LIVE_STAGES == []
+    assert live() == []
     # lazy query path (no close() possible before the caller's action):
     # repeated builds hold at most ONE build's stages
+    first = build_release(spark, sf_dir)
+    first_frames = live()
     build_release(spark, sf_dir)
-    build_release(spark, sf_dir)
-    assert len(cr._LIVE_STAGES) == 2
-    cr._retire_predecessor_stages()
-    assert cr._LIVE_STAGES == []
+    assert len(live()) == 2
+    assert not any(df.is_cached for df in first_frames)
+    first.close()
+    assert live() == []
 
 
 def test_release_contains_no_exact_duplicates_or_eval_overlap(spark, sf_dir, tmp_path):

@@ -1,9 +1,10 @@
-"""Reliable-checkpoint mode for the iterative graph loops (r10 judge
-item 3): when the session has a checkpoint dir configured, every
-``_truncate`` call in operators/graph.py switches from executor-local
-``localCheckpoint`` (lineage dies with a lost executor) to DFS-backed
-``checkpoint()`` — the mode a real 1000-executor run must use so a
-mid-loop executor loss recovers from storage instead of killing the job.
+"""Reliable-checkpoint mode for the iterative loops (r10 judge item 3):
+when the session has a checkpoint dir configured, every
+``stagecache.checkpoint`` call — the graph operators' and the query
+loops' — switches from executor-local ``localCheckpoint`` (lineage dies
+with a lost executor) to DFS-backed ``checkpoint()`` — the mode a real
+1000-executor run must use so a mid-loop executor loss recovers from
+storage instead of killing the job.
 
 These tests pin (a) the mode switch actually engages (checkpoint files
 land in the dir), (b) results are IDENTICAL in both modes — including
@@ -16,14 +17,17 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
 
 import pytest
 
+from ntd_gtfs_to_socrata_spark.operators import stagecache
 from ntd_gtfs_to_socrata_spark.operators.graph import (
     connected_components,
     connected_components_star,
     pagerank,
 )
+from ntd_gtfs_to_socrata_spark.queries import similarity_q, stats_q, time_windows, tokenizer_q
 
 
 @pytest.fixture
@@ -99,16 +103,54 @@ def test_cc_superseded_checkpoints_deleted(spark, reliable_dir, monkeypatch):
     edges = spark.createDataFrame(rows, "src long, dst long")
     out = {tuple(r) for r in connected_components(edges).collect()}
     assert out == {(i, 1) for i in range(1, 10)}
-    rdd_dirs = [
-        d
-        for root, dirs, _ in os.walk(reliable_dir)
-        for d in dirs
-        if d.startswith("rdd-")
-    ]
     # bidir + the live tail of the labels chain; rounds ~8, so any leak
     # shows up immediately
-    assert len(rdd_dirs) <= 3, rdd_dirs
+    assert _rdd_dirs(reliable_dir) <= 3
     # r12 ADVICE: the GC's broad except counts swallowed failures — if a
     # Spark upgrade breaks the private accessors, cleanup attempts raise
     # and this counter (not just the dir count above) pinpoints it
-    assert G.SKIPPED_CHECKPOINT_CLEANUPS == 0
+    assert stagecache.SKIPPED_CHECKPOINT_CLEANUPS == 0
+
+
+def _rdd_dirs(root) -> int:
+    return sum(1 for _, dirs, _ in os.walk(root) for d in dirs if d.startswith("rdd-"))
+
+
+# One checkpointing loop per query module, run for ``1 + rounds`` rounds
+# (steps, iterations, funnel stages, merges).
+def _mmr_steps(spark, sf_dir, monkeypatch, rounds):
+    monkeypatch.setattr(similarity_q, "_MMR_K", 2 + rounds)
+    return similarity_q.sim_mmr_diversify(spark, sf_dir)
+
+
+def _bradley_terry_iterations(spark, sf_dir, monkeypatch, rounds):
+    monkeypatch.setattr(stats_q, "_BT_ITERS", 1 + rounds)
+    return stats_q.eval_bradley_terry(spark, sf_dir)
+
+
+def _funnel_stages(spark, sf_dir, monkeypatch, rounds):
+    monkeypatch.setattr(time_windows, "_FUNNEL_STAGES", ["view", "click", "purchase"][: 1 + rounds])
+    return time_windows.tw_funnel_stages(spark, sf_dir)
+
+
+def _bpe_merges(spark, sf_dir, monkeypatch, rounds):
+    return tokenizer_q.train_bpe_merges(spark, sf_dir, n_merges=1 + rounds)
+
+
+@pytest.mark.parametrize(
+    "run", [_mmr_steps, _bradley_terry_iterations, _funnel_stages, _bpe_merges]
+)
+def test_query_loop_reliable_mode(spark, sf_dir, reliable_dir, monkeypatch, run):
+    """Each loop writes checkpoint files in reliable mode, keeps as many
+    of them whether it runs one round more or not (each round's
+    checkpoint supersedes the last), and returns local mode's rows."""
+    added, rows = [], None
+    for rounds in (1, 2):
+        before = _rdd_dirs(reliable_dir)
+        rows = Counter(map(tuple, run(spark, sf_dir, monkeypatch, rounds).collect()))
+        added.append(_rdd_dirs(reliable_dir) - before)
+    assert added[0] > 0, "reliable mode did not write checkpoint files"
+    assert added[0] == added[1], f"checkpoint dirs grow with rounds: {added}"
+    assert stagecache.SKIPPED_CHECKPOINT_CLEANUPS == 0
+    spark.sparkContext._jsc.sc().setCheckpointDir(None)
+    assert Counter(map(tuple, run(spark, sf_dir, monkeypatch, 2).collect())) == rows

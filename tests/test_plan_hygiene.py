@@ -5,6 +5,7 @@ seeded global window and stay quiet on properly partitioned ones."""
 from __future__ import annotations
 
 import io
+import re
 import subprocess
 import sys
 from contextlib import redirect_stdout
@@ -317,3 +318,32 @@ def test_dedup_verdict_joins_unhinted(spark, sf_dir, name):
         assert "node" in logical
     else:
         assert not has_broadcast_hint(logical), f"{name} carries a forced broadcast hint"
+
+
+# A direct materialization call: one of these outside operators/stagecache.py
+# bypasses its checkpoint-dir policy and its one-frame-per-scope lifecycle.
+_MATERIALIZE_CALL = re.compile(
+    r"\.(?:localCheckpoint|persist|unpersist)\(|\.cache\(\)|(?<!stagecache)\.checkpoint\("
+)
+
+
+def materialize_calls(package: Path) -> list[str]:
+    """``path:line`` of every direct materialization call in ``package``
+    outside ``operators/stagecache.py``."""
+    hits = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        if rel == "operators/stagecache.py":
+            continue
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if _MATERIALIZE_CALL.search(line):
+                hits.append(f"{rel}:{n}")
+    return hits
+
+
+def test_materialization_goes_through_stagecache():
+    """Every lineage cut and stage cache in the package goes through
+    ``operators/stagecache.py`` (``checkpoint``, ``stage_boundary``,
+    ``release``), so one module owns the local-vs-reliable choice and the
+    cache lifecycle."""
+    assert materialize_calls(REPO_ROOT / "ntd_gtfs_to_socrata_spark") == []

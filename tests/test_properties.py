@@ -268,21 +268,42 @@ def test_cc_driver_path_equals_loop_law(spark, graph):
     assert Counter(map(tuple, driver.collect())) == want
 
 
+# ids at both ends of the long range: any sum of two of them overflows
+EDGE_LONG_IDS = st.one_of(
+    st.integers(min_value=-(2**63), max_value=-(2**63) + 4),
+    st.integers(min_value=2**63 - 5, max_value=2**63 - 1),
+)
+STAR_GRAPHS = st.one_of(
+    st.tuples(st.just("long"), EDGES),
+    st.tuples(st.just("long"), st.lists(st.tuples(EDGE_LONG_IDS, EDGE_LONG_IDS), max_size=12)),
+    st.tuples(
+        st.just("string"),
+        st.lists(
+            st.tuples(st.text(alphabet="aZé中", max_size=2), st.text(alphabet="aZé中", max_size=2)),
+            max_size=12,
+        ),
+    ),
+)
+
+
 @slow
-@given(edges=EDGES)
-def test_cc_star_equals_propagation_law(spark, edges):
+@given(graph=STAR_GRAPHS)
+def test_cc_star_equals_propagation_law(spark, graph):
     """The diameter-halving star variant is a DROP-IN for min-label
     propagation on arbitrary random graphs — identical (node,
     component_id) maps, including self-loop-only singleton nodes (which
-    the star variant must keep via its node-universe left join)."""
+    the star variant must keep via its node-universe left join), for
+    ``string`` ids and for ``long`` ids at both ends of their range (the
+    fixpoint test must neither cast nor add ids)."""
     from ntd_gtfs_to_socrata_spark.operators.graph import (
         connected_components,
         connected_components_star,
     )
 
-    df = spark.createDataFrame(edges or [(None, None)], "src long, dst long").filter(
-        F.col("src").isNotNull()
-    )
+    id_type, edges = graph
+    df = spark.createDataFrame(
+        edges or [(None, None)], f"src {id_type}, dst {id_type}"
+    ).filter(F.col("src").isNotNull())
     prop = {r["node"]: r["component_id"] for r in connected_components(df).collect()}
     star = {
         r["node"]: r["component_id"]

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import uuid
 
-import pytest as _pytest
-
 from ntd_gtfs_to_socrata_spark.queries.time_windows import tw_session, tw_tumbling
 from ntd_gtfs_to_socrata_spark.streaming import event_windows as EW
 
@@ -506,206 +504,6 @@ def test_retire_previous_keeps_table_names_without_session(monkeypatch):
     import os
 
     assert not os.path.exists(d)
-
-
-def test_tws_ewma_parity_or_documented_gate(spark, sf_dir):
-    """transformWithStateInPandas port (stateful_v2): when the
-    google.protobuf runtime is present the v2 EWMA must be BIT-EXACT
-    equal to the batch window query (same oracle as stream_ewma); in
-    this container the runtime is absent, so the gate itself is pinned —
-    the probe must say unavailable AND the failure must be the documented
-    state-server ImportError, not something new."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from ntd_gtfs_to_socrata_spark.streaming import stateful as STF
-    from ntd_gtfs_to_socrata_spark.streaming import stateful_v2 as V2
-    from ntd_gtfs_to_socrata_spark.io import load_table
-    from ntd_gtfs_to_socrata_spark.queries.time_windows import tw_ewma_smoothed
-
-    purchases = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    staging = STF.stage_time_sliced(spark, purchases, n_slices=4)
-    stream = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    out = V2.running_ewma_tws(stream)
-
-    if not V2.tws_available():
-        with pytest.raises(Exception) as exc_info:
-            EW.run_available_now_to_memory(out, "tws_gate_probe", "update")
-        msg = str(exc_info.value)
-        # the protobuf ImportError surfaces as the state-server driver
-        # worker crashing before init (full traceback goes to driver logs)
-        assert (
-            "STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE" in msg
-            or "google.protobuf" in msg
-            or "TransformWithStateInPySpark driver worker exited" in msg
-        ), msg[:500]
-        return
-
-    EW.run_available_now_to_memory(out, "tws_ewma", "update")
-    got = {
-        (r["user_id"], r["event_id"]): r["ewma"]
-        for r in spark.table("tws_ewma").collect()
-    }
-    want = {
-        (r["user_id"], r["event_id"]): r["ewma"]
-        for r in tw_ewma_smoothed(spark, sf_dir).collect()
-    }
-    assert got == want  # bit-exact, not isclose
-
-
-class _TwsProtobufGate(Exception):
-    """The documented tWS blocker: google.protobuf absent, state server
-    cannot initialize."""
-
-
-@_pytest.mark.xfail(
-    strict=True,
-    raises=_TwsProtobufGate,
-    reason="google.protobuf absent: tWS state server cannot initialize",
-)
-def test_tws_runtime_unlock_is_loud(spark, sf_dir):
-    """STRICT xfail on the tWS runtime gate (r12 verdict item 7): runs
-    the transformWithStateInPandas leg END-TO-END and asserts bit-exact
-    batch parity. Today google.protobuf is absent, so the run raises the
-    documented state-server error — re-raised as _TwsProtobufGate, the
-    exact class the xfail expects. The moment the container gains the
-    protobuf runtime, parity executes and passes -> XPASS -> strict=True
-    turns that into a loud suite FAILURE: promote the tWS leg (drop this
-    marker; retire the documented-gate branches in the two
-    *_or_documented_gate tests). A NEW failure mode (anything other than
-    the protobuf gate) is a real failure, not an xfail."""
-    from pyspark.sql import functions as F
-
-    from ntd_gtfs_to_socrata_spark.io import load_table
-    from ntd_gtfs_to_socrata_spark.queries.time_windows import tw_ewma_smoothed
-    from ntd_gtfs_to_socrata_spark.streaming import stateful as STF
-    from ntd_gtfs_to_socrata_spark.streaming import stateful_v2 as V2
-
-    purchases = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    staging = STF.stage_time_sliced(spark, purchases, n_slices=4)
-    stream = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-    )
-    out = V2.running_ewma_tws(stream)
-    try:
-        EW.run_available_now_to_memory(out, "tws_unlock_probe", "update")
-    except Exception as e:  # noqa: BLE001 — classify, then re-raise
-        msg = str(e)
-        if (
-            "STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE" in msg
-            or "google.protobuf" in msg
-            or "TransformWithStateInPySpark driver worker exited" in msg
-        ):
-            raise _TwsProtobufGate(msg[:300]) from e
-        raise
-    got = {
-        (r["user_id"], r["event_id"]): r["ewma"]
-        for r in spark.table("tws_unlock_probe").collect()
-    }
-    want = {
-        (r["user_id"], r["event_id"]): r["ewma"]
-        for r in tw_ewma_smoothed(spark, sf_dir).collect()
-    }
-    assert got == want  # bit-exact — XPASS here is the loud unlock
-
-
-def test_stateful_v2_default_dispatch(spark, sf_dir, monkeypatch):
-    """r9 verdict task 7: the stateful_v2 dispatcher must route to
-    transformWithStateInPandas when the runtime supports it and to
-    applyInPandasWithState otherwise — asserted on the LOGICAL PLAN of
-    the returned frame (plan construction needs no protobuf; only
-    execution does), so both branches are pinned even in this container
-    where tWS cannot run."""
-    from ntd_gtfs_to_socrata_spark.streaming import stateful as STF
-    from ntd_gtfs_to_socrata_spark.streaming import stateful_v2 as V2
-
-    stream = spark.readStream.format("rate").load().selectExpr(
-        "value AS user_id",
-        "value AS event_id",
-        "CAST(value AS DOUBLE) AS value",
-        "timestamp AS ts",
-    )
-
-    monkeypatch.setattr(V2, "tws_available", lambda: True)
-    plan_v2 = V2.default_running_ewma(stream)._jdf.queryExecution().logical().toString()
-    assert "transformwithstateinpy" in plan_v2.lower(), plan_v2
-    plan_v2t = (
-        V2.default_running_user_totals(stream)._jdf.queryExecution().logical().toString()
-    )
-    assert "transformwithstateinpy" in plan_v2t.lower(), plan_v2t
-
-    monkeypatch.setattr(V2, "tws_available", lambda: False)
-    plan_v1 = V2.default_running_ewma(stream)._jdf.queryExecution().logical().toString()
-    assert "flatmapgroupsinpandaswithstate" in plan_v1.lower(), plan_v1
-    plan_v1t = (
-        V2.default_running_user_totals(stream)._jdf.queryExecution().logical().toString()
-    )
-    assert "flatmapgroupsinpandaswithstate" in plan_v1t.lower(), plan_v1t
-
-
-def test_tws_timer_eviction_parity_or_documented_gate(spark, sf_dir):
-    """Timer-based idle eviction on transformWithStateInPandas
-    (stateful_v2.idle_evicting_user_totals_tws): when the tWS runtime is
-    present, the non-evicted totals must equal the batch groupBy (the
-    idle window is set far beyond the test's wall time, so no timer can
-    fire and rows are evicted=false); in this container the runtime is
-    absent, so the documented state-server ImportError gate is pinned
-    instead — the same contract as test_tws_ewma_parity_or_documented_gate."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from ntd_gtfs_to_socrata_spark.io import load_table
-    from ntd_gtfs_to_socrata_spark.streaming import stateful_v2 as V2
-
-    stream = EW.read_events_stream(spark, sf_dir)
-    out = V2.idle_evicting_user_totals_tws(stream, idle_ms=3_600_000)
-
-    if not V2.tws_available():
-        with pytest.raises(Exception) as exc_info:
-            EW.run_available_now_to_memory(out, "tws_evict_probe", "update")
-        msg = str(exc_info.value)
-        assert (
-            "STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE" in msg
-            or "google.protobuf" in msg
-            or "TransformWithStateInPySpark driver worker exited" in msg
-        ), msg[:500]
-        return
-
-    EW.run_available_now_to_memory(out, "tws_evict", "update")
-    final = (
-        spark.table("tws_evict")
-        .filter(~F.col("evicted"))
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("total_value", "n_events").alias("total_value"),
-        )
-    )
-    got = {
-        (r["user_id"], r["n_events"], round(r["total_value"], 6))
-        for r in final.collect()
-    }
-    want = {
-        (r["user_id"], r["n_events"], round(r["total_value"], 6))
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .collect()
-    }
-    assert got == want
 
 
 def test_stream_rate_sessionize_unbounded_parity(spark):
