@@ -48,8 +48,6 @@ Scale posture per round:
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -74,6 +72,74 @@ _SMALL_GRAPH_EDGES = 200_000
 _DRIVER_ID_TYPES = (
     T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType(), T.StringType(),
 )
+
+
+def undirected(df: DataFrame, a: str, b: str, u: str, v: str) -> DataFrame:
+    """Both directions of every ``(a, b)`` row of ``df``, as ``(u, v)``
+    rows. Duplicates and self-loops pass through; callers add
+    ``.distinct()`` where they need an edge set.
+
+    Both directions come from ONE pass over ``df`` (an explode of a
+    2-element array, not a union of two branches): a union re-lists — and
+    re-EXECUTES — the upstream edge-producing subtree per branch, which is
+    ruinous when edges come from an expensive pair generator (dedup verify
+    joins, shingle inverted indexes)."""
+    return df.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(u), F.col(b).alias(v)),
+                F.struct(F.col(b).alias(u), F.col(a).alias(v)),
+            )
+        ).alias("e")
+    ).select(f"e.{u}", f"e.{v}")
+
+
+def _rounds(state: DataFrame, step, n: int) -> DataFrame:
+    """Apply ``step(state, i)`` for ``i`` in ``0 .. n-1``; return the last
+    state.
+
+    Lineage is cut every second round and never after the last one, each
+    checkpoint superseding the previous one (not the caller's initial
+    state). A fixed-round loop has no convergence probe riding the
+    checkpoint job, so each materialization is pure overhead: one
+    scheduled job plus a full write of the state. A cadence of 2 keeps
+    the plan depth bounded (it doubles, once) while halving the
+    checkpoint jobs and state writes; measured 3.2 s → 2.8 s for
+    ``pagerank`` on the near-dup graph at sf0.1 with bit-identical ranks,
+    and at 100 TB the same cadence halves the DFS bytes reliable-mode
+    checkpointing writes. The last round is never cut: the caller's one
+    action executes it directly, and a checkpoint there would only
+    materialize the result twice."""
+    cut = None
+    for i in range(n):
+        state = step(state, i)
+        if i % 2 == 1 and i < n - 1:
+            state = cut = checkpoint(state, supersedes=cut)
+    return state
+
+
+def _until_fixpoint(state, step, budget: int, name: str, remedy: str, changed=None):
+    """Apply ``step(state) -> (state, changed)`` until a step reports that
+    it changed nothing; return that step's state.
+
+    ``changed`` is a count the step observes on its checkpoint job (an
+    ``observe()`` metric fires on the eager materialization), so the
+    convergence check costs no job of its own. A known-zero starting
+    ``changed`` returns ``state`` at once. Every step counts against
+    ``budget``, the one that reports zero included; exhaustion RAISES,
+    with ``remedy`` telling the caller what to change — a partial
+    labeling or a partial peel is a silently WRONG result, so a loop
+    never returns one."""
+    if changed == 0:
+        return state
+    for _ in range(budget):
+        state, changed = step(state)
+        if changed == 0:
+            return state
+    raise RuntimeError(
+        f"{name} did not converge within {budget} rounds (a partial result "
+        f"would be wrong); {remedy}"
+    )
 
 
 def _components_on_driver(bidir: DataFrame) -> DataFrame:
@@ -162,23 +228,9 @@ def connected_components(
     raise the budget or switch to a diameter-halving scheme
     (large-star/small-star, Kiveris et al.).
     """
-    # both directions from ONE pass over the edge input (explode of a
-    # 2-element array, not a union of two branches): a union re-lists —
-    # and re-EXECUTES — the upstream edge-producing subtree per branch,
-    # which is ruinous when edges come from an expensive pair generator
-    # (dedup verify joins, shingle inverted indexes)
-    size = Observation(f"cc_edges_{uuid.uuid4().hex[:8]}")
+    size = Observation()
     bidir = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct("u", "v"),
-                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
+        undirected(edges, src, dst, "u", "v")
         .distinct()
         .observe(size, F.count(F.lit(1)).alias("n"))
         .transform(checkpoint)
@@ -194,7 +246,7 @@ def connected_components(
         .select("node", F.col("node").alias("label"))
         .transform(checkpoint)
     )
-    converged = False
+
     # NOTE (r14, measured and REJECTED): fusing TWO propagation steps per
     # materialized round — sound for correctness (labels are monotone
     # non-increasing, so a double round that lowers no label still
@@ -206,23 +258,20 @@ def connected_components(
     # deeper per-round plan as MORE stage-jobs, not fewer. Single-step
     # rounds with the probe riding each checkpoint are the measured
     # optimum for fast-converging graphs.
-    for i in range(max_iterations):
+    def lower(labels: DataFrame):
         nbr_min = (
             bidir.join(labels, bidir.v == labels.node)
             .groupBy(F.col("u").alias("node2"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        # the convergence probe rides the checkpoint job via observe() —
-        # metrics fire when the eager checkpoint materializes, so each
-        # round is ONE job (join+agg+checkpoint+probe). It counts the
-        # labels this round lowers: zero IS the fixpoint. (A sum of
-        # labels would cast string ids to double, which fails under
-        # ANSI, and can overflow on 64-bit hashed ids.)
-        obs = Observation(f"cc_round_{i}_{uuid.uuid4().hex[:8]}")
-        labels = (
+        # the probe counts the labels this round lowers: zero IS the
+        # fixpoint. (A sum of labels would cast string ids to double,
+        # which fails under ANSI, and can overflow on 64-bit hashed ids.)
+        lowered = Observation()
+        nxt = (
             labels.join(nbr_min, labels.node == F.col("node2"), "left")
             .observe(
-                obs, F.count_if(F.col("nbr_label") < F.col("label")).alias("lowered")
+                lowered, F.count_if(F.col("nbr_label") < F.col("label")).alias("n")
             )
             .select(
                 "node",
@@ -230,18 +279,18 @@ def connected_components(
                     F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
                 ).alias("label"),
             )
-            .transform(lambda d, prev=labels: checkpoint(d, supersedes=prev))
+            .transform(lambda d: checkpoint(d, supersedes=labels))
         )
-        if obs.get["lowered"] == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            "iterations (graph diameter exceeds the propagation budget); "
-            "partial labels would be wrong — raise max_iterations or use "
-            "connected_components_star (diameter-halving)"
-        )
+        return nxt, lowered.get["n"]
+
+    labels = _until_fixpoint(
+        labels,
+        lower,
+        max_iterations,
+        "connected_components",
+        "the graph diameter exceeds the propagation budget; raise "
+        "max_iterations or use connected_components_star (diameter-halving)",
+    )
     return labels.select("node", F.col("label").alias("component_id"))
 
 
@@ -251,7 +300,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 5,
     damping: float = 0.85,
-    trunc_every: int = 2,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge set; returns
     (node, rank) for every node that appears as a source or target.
@@ -270,22 +318,10 @@ def pagerank(
     source key — out-degrees are precomputed once and travel WITH the
     edge rows, so no second join) + ONE aggregation on the target key.
     Rank state is (long, double) = 16 bytes/row regardless of document
-    width. Lineage is truncated every ``trunc_every`` rounds (not every
-    round): a FIXED-iteration loop has no per-round convergence probe
-    riding the checkpoint job, so each materialization is pure overhead
-    — one scheduled job plus a full write of the rank state. A cadence
-    of 2 keeps the plan depth bounded (it doubles, once) while halving
-    the checkpoint jobs and state writes; measured 3.2s → 2.8s on the
-    near-dup graph at sf0.1 with bit-identical ranks, and at 100 TB the
-    same cadence halves the DFS bytes written by reliable-mode
-    checkpointing. The final iteration is never truncated — the caller's
-    one action executes it directly and a checkpoint there would only
-    add a second materialization of the result. Skewed in-degree (a
-    viral page) is an AQE skew-join case; the contribution aggregation
-    itself partial-combines map-side.
+    width; lineage is cut every second round, never after the last (see
+    ``_rounds``). Skewed in-degree (a viral page) is an AQE skew-join
+    case; the contribution aggregation itself partial-combines map-side.
     """
-    if trunc_every < 1:
-        raise ValueError(f"trunc_every must be >= 1, got {trunc_every}")
     # materialize the distinct edge set ONCE before deriving out-degrees
     # and the node universe — e_deg and nodes otherwise each re-execute
     # the full upstream edge-producing subtree (expensive when edges come
@@ -304,28 +340,22 @@ def pagerank(
         .distinct()
         .transform(checkpoint)
     )
-    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    # the last CHECKPOINTED rank frame — with a cadence > 1 the frame a
-    # new checkpoint supersedes is this one, not the (un-truncated)
-    # previous loop value, whose plan is a projection with no files to GC
-    last_ckpt: DataFrame | None = None
-    for i in range(iterations):
+
+    def step(ranks: DataFrame, i: int) -> DataFrame:
         contrib = (
             e_deg.join(ranks, e_deg.e_src == ranks.node)
             .groupBy(F.col("e_dst").alias("node2"))
             .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("in_sum"))
         )
-        ranks = nodes.join(contrib, nodes.node == F.col("node2"), "left").select(
+        return nodes.join(contrib, nodes.node == F.col("node2"), "left").select(
             "node",
             (
                 F.lit(1.0 - damping)
                 + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
             ).alias("rank"),
         )
-        if (i + 1) % trunc_every == 0 and i < iterations - 1:
-            ranks = checkpoint(ranks, supersedes=last_ckpt)
-            last_ckpt = ranks
-    return ranks
+
+    return _rounds(nodes.select("node", F.lit(1.0).alias("rank")), step, iterations)
 
 
 def _large_star(e: DataFrame, moved: Observation) -> DataFrame:
@@ -397,7 +427,7 @@ def connected_components_star(
     ).transform(checkpoint)
     # an empty edge set needs no rounds (and would run its rewire probes
     # under plans AQE prunes to empty relations, which report no metrics)
-    size = Observation(f"ccstar_edges_{uuid.uuid4().hex[:8]}")
+    size = Observation()
     e = (
         base.filter(F.col("u") != F.col("v"))
         .distinct()
@@ -410,26 +440,24 @@ def connected_components_star(
         .distinct()
         .transform(checkpoint)
     )
-    converged = size.get["n"] == 0
-    for i in range(max_iterations):
-        if converged:
-            break
+
+    def star(e: DataFrame):
         # fixpoint when a round rewires no edge: its output is then its
         # input, oriented high→low. Both steps count their rewired edges
-        # via observe() on the round's checkpoint job (metrics fire on
-        # eager materialization) — one job per round, no separate scan,
-        # and a count works for any orderable id type and cannot overflow
-        tag = f"{i}_{uuid.uuid4().hex[:8]}"
-        large = Observation(f"ccstar_large_{tag}")
-        small = Observation(f"ccstar_small_{tag}")
-        e = checkpoint(_small_star(_large_star(e, large), small), supersedes=e)
-        converged = large.get["n"] == 0 and small.get["n"] == 0
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"{max_iterations} rounds — unexpected for any graph "
-            "(O(log n) bound); check for adversarial inputs"
-        )
+        # on the round's checkpoint job; a count works for any orderable
+        # id type and cannot overflow
+        large, small = Observation(), Observation()
+        nxt = checkpoint(_small_star(_large_star(e, large), small), supersedes=e)
+        return nxt, large.get["n"] + small.get["n"]
+
+    e = _until_fixpoint(
+        e,
+        star,
+        max_iterations,
+        "connected_components_star",
+        "unexpected for any graph (O(log n) bound); check for adversarial inputs",
+        changed=size.get["n"],
+    )
     # after collapse every edge points node→component-min; nodes absent
     # from the final edge set are their own component (singletons)
     labels = e.groupBy("u").agg(F.min("v").alias("component_id"))
@@ -444,7 +472,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    trunc_every: int = 2,
 ) -> DataFrame:
     """Fixed-iteration label propagation (community detection): every node
     starts with its own id as label; each round it adopts the most
@@ -466,13 +493,9 @@ def label_propagation(
     struct ordering IS "highest count, tie to smallest label", computed
     with map-side partial aggregation instead of a per-node-partition
     window sort — then one join back to the node set, all
-    hash-partitioned on the node key. Label state is 16 bytes/row.
-    Lineage is truncated every ``trunc_every`` rounds and never on the
-    final one (the ``pagerank`` rationale: fixed-iteration loops carry no
-    per-round convergence probe, so each skipped checkpoint is one fewer
-    job and one fewer full state write)."""
-    if trunc_every < 1:
-        raise ValueError(f"trunc_every must be >= 1, got {trunc_every}")
+    hash-partitioned on the node key. Label state is 16 bytes/row;
+    lineage is cut every second round, never after the last (see
+    ``_rounds``)."""
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).distinct()
     e = e.transform(checkpoint)
     nodes = (
@@ -481,9 +504,8 @@ def label_propagation(
         .distinct()
         .transform(checkpoint)
     )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    last_ckpt: DataFrame | None = None
-    for i in range(iterations):
+
+    def step(labels: DataFrame, i: int) -> DataFrame:
         votes = (
             e.join(labels, e.e_src == labels.node)
             .groupBy(F.col("e_dst").alias("node2"), "label")
@@ -498,14 +520,12 @@ def label_propagation(
             )
             .select("node2", F.col("m.l").alias("new_label"))
         )
-        labels = labels.join(best, labels.node == F.col("node2"), "left").select(
+        return labels.join(best, labels.node == F.col("node2"), "left").select(
             "node",
             F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
         )
-        if (i + 1) % trunc_every == 0 and i < iterations - 1:
-            labels = checkpoint(labels, supersedes=last_ckpt)
-            last_ckpt = labels
-    return labels
+
+    return _rounds(nodes.select("node", F.col("node").alias("label")), step, iterations)
 
 
 def k_core(
@@ -531,43 +551,26 @@ def k_core(
     super-linear on deep graphs (9.9× wall at 10× data in the r8 sf1
     sweep; rounds grow with graph depth).
 
-    Loop contract as ``connected_components``: ``checkpoint``
-    truncates lineage; the fixpoint probe (peel set empty) rides the
-    DEGREE checkpoint one step ahead as an ``observe()`` metric — each
-    deg materialization reports how many of its rows are already < k, so
-    no round pays a separate peel-set job. Peeling removes at least
-    one node per non-terminal round, so ``node_count`` rounds always
-    suffice — the DEFAULT bound (``max_iterations=None``) is derived from
-    the node count (one control-plane scalar), making exhaustion
-    unreachable. A long simple path is the worst case: k=2 peels only the
-    two endpoints per round, so an n-node chain needs ~n/2 rounds — the
-    r6 ADVICE case that overran the old fixed default of 30. Pass an
-    explicit ``max_iterations`` only to enforce an external round budget
-    (e.g. the oracle's unroll depth); exhaustion then RAISES — a partial
-    peel is a wrong k-core, never returned.
+    Loop contract as ``connected_components`` (``_until_fixpoint``): the
+    fixpoint probe (peel set empty) rides the DEGREE checkpoint one step
+    ahead as an ``observe()`` metric — each deg materialization reports
+    how many of its rows are already < k, so no round pays a separate
+    peel-set job, and the round that empties the peel set is the last
+    one run. Every round removes at least one node, so ``node_count``
+    rounds always suffice — the DEFAULT bound (``max_iterations=None``)
+    is derived from the node count (one control-plane scalar), making
+    exhaustion unreachable. A long simple path is the worst case: k=2
+    peels only the two endpoints per round, so an n-node chain needs
+    ~n/2 rounds — the r6 ADVICE case that overran the old fixed default
+    of 30. Pass an explicit ``max_iterations`` only to enforce an external
+    round budget (e.g. the oracle's unroll depth); exhaustion then RAISES
+    — a partial peel is a wrong k-core, never returned.
 
     Scale posture: every shuffle is keyed on a node id over the delta
     edge set (shrinking) or the node-sized degree table; no window, no
     collect of anything but the per-round empty-check scalar.
     """
-    from pyspark.sql import functions as F
-
-    # symmetrize via explode, not union — one execution of the upstream
-    # pair generator instead of one per union branch
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct("s", "d"),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .distinct()
-        .transform(checkpoint)
-    )
+    e = undirected(edges, src, dst, "s", "d").distinct().transform(checkpoint)
     # the ONE full-edge-set aggregation; every later round touches only
     # delta edges and the node-sized degree table. The fixpoint probe
     # rides ONE STEP AHEAD on the degree checkpoint (r14): each deg
@@ -579,32 +582,20 @@ def k_core(
     # embeddings below re-run a map over checkpointed rows, nothing else.
     # The node-count bound rides the same observe (the old deg.count()
     # control job removed).
-    obs0 = Observation(f"kcore_seed_{uuid.uuid4().hex[:8]}")
+    seed = Observation()
     deg = (
         e.groupBy("s")
         .agg(F.count(F.lit(1)).alias("deg"))
         .observe(
-            obs0,
+            seed,
             F.count(F.lit(1)).alias("n_nodes"),
             F.sum((F.col("deg") < k).cast("int")).alias("n_low"),
         )
         .transform(checkpoint)
     )
-    seed_metrics = obs0.get
-    if max_iterations is None:
-        # one round per node is a hard upper bound (each non-terminal
-        # round removes >= 1 node); +1 for the terminal fixpoint check
-        max_iterations = seed_metrics["n_nodes"] + 1
-    # sum() over an empty frame observes NULL — an empty degree table
-    # (edgeless input, or a graph that fully peels away) means an empty
-    # peel set
-    n_low = seed_metrics["n_low"] or 0
-    for i in range(max_iterations):
-        if n_low == 0:
-            return deg.select(
-                F.col("s").alias("node"),
-                F.col("deg").cast("long").alias("core_degree"),
-            )
+
+    def peel(state):
+        deg, e = state
         low = deg.filter(F.col("deg") < k).select("s")
         low_d = low.select(F.col("s").alias("d"))
         # delta degree loss: edges whose DEST was just removed but whose
@@ -616,7 +607,7 @@ def k_core(
             .groupBy("s")
             .agg(F.count(F.lit(1)).alias("lost"))
         )
-        obs = Observation(f"kcore_round_{i}_{uuid.uuid4().hex[:8]}")
+        n_low = Observation()
         deg = (
             deg.join(low, "s", "left_anti")
             .join(lost, "s", "left")
@@ -624,7 +615,7 @@ def k_core(
                 "s",
                 (F.col("deg") - F.coalesce(F.col("lost"), F.lit(0))).alias("deg"),
             )
-            .observe(obs, F.sum((F.col("deg") < k).cast("int")).alias("n_low"))
+            .observe(n_low, F.sum((F.col("deg") < k).cast("int")).alias("n"))
             .transform(lambda d, prev=deg: checkpoint(d, supersedes=prev))
         )
         # shrink the surviving edge set (map-side with a broadcast low;
@@ -634,13 +625,23 @@ def k_core(
             .join(low_d, "d", "left_anti")
             .transform(lambda d, prev=e: checkpoint(d, supersedes=prev))
         )
-        n_low = obs.get["n_low"] or 0
-    raise RuntimeError(
-        f"k_core did not reach a fixpoint within the caller-imposed bound of "
-        f"{max_iterations} peeling rounds (peeling needs at most one round "
-        "per node — long chains peel only from the ends, so a ~2*bound-node "
-        "path legitimately exceeds it); raise max_iterations or pass None "
-        "to derive the bound from the node count"
+        # sum() over an empty frame observes NULL — an empty degree table
+        # (edgeless input, or a graph that fully peels away) means an
+        # empty peel set
+        return (deg, e), n_low.get["n"] or 0
+
+    deg, _ = _until_fixpoint(
+        (deg, e),
+        peel,
+        seed.get["n_nodes"] if max_iterations is None else max_iterations,
+        "k_core",
+        "max_iterations is a caller-imposed bound (peeling needs at most one "
+        "round per node, and long chains peel only from the ends); raise it "
+        "or pass None to derive the bound from the node count",
+        changed=seed.get["n_low"] or 0,
+    )
+    return deg.select(
+        F.col("s").alias("node"), F.col("deg").cast("long").alias("core_degree")
     )
 
 
@@ -728,6 +729,50 @@ def hits(
     )
 
 
+def _bfs(
+    edges: DataFrame, seeds: DataFrame, src: str, dst: str, max_hops: int, keys: list
+) -> DataFrame:
+    """The BFS loop both public BFS operators run: state is one row per
+    ``keys`` (``["node"]`` or ``["seed", "node"]``) plus its ``dist``, every
+    key column starting as the seed id at dist 0; each round relaxes the
+    rim over the symmetrized edges and min-merges it into the state on
+    ``keys``. Lineage is cut every second round, never after the last (a
+    fixed-round loop; see ``_rounds``)."""
+    e = undirected(edges, src, dst, "s", "d").distinct().transform(checkpoint)
+    seed = F.col(seeds.columns[0])
+    dist = seeds.select(
+        *[seed.alias(k) for k in keys], F.lit(0).cast("int").alias("dist")
+    ).transform(checkpoint)
+    carried = keys[:-1]  # keys beside "node": the seed id, when kept
+
+    def hop(dist: DataFrame, i: int) -> DataFrame:
+        # relax only the RIM — rows first reached in round i (dist == i).
+        # Lossless by the BFS invariant, pointwise per key: distances
+        # never decrease under the min-merge, so a row settled at dist
+        # k < i was already relaxed in round k and re-relaxing it can only
+        # re-derive nd = k + 1 <= existing. The frontier join's dist side
+        # shrinks from |reached so far| to |newly reached| (guide §2.3:
+        # shuffle the rim, not the accumulated state).
+        frontier = dist.filter(F.col("dist") == F.lit(i))
+        relaxed = (
+            e.join(frontier, e.s == frontier.node)
+            .groupBy(
+                *[F.col(k).alias(k + "2") for k in carried], F.col("d").alias("node2")
+            )
+            .agg((F.min("dist") + F.lit(1)).alias("nd"))
+        )
+        on = [dist[k] == F.col(k + "2") for k in keys]
+        return dist.join(relaxed, on, "full").select(
+            *[F.coalesce(F.col(k), F.col(k + "2")).alias(k) for k in keys],
+            F.least(
+                F.coalesce(F.col("dist"), F.lit(2147483647)),
+                F.coalesce(F.col("nd"), F.lit(2147483647)),
+            ).alias("dist"),
+        )
+
+    return _rounds(dist, hop, max_hops)
+
+
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
@@ -746,55 +791,9 @@ def bfs_distances(
     signal, which is also what keeps the unrolled-CTE oracle exact).
     State is one (node, dist) row per REACHED node; the frontier join
     prunes to rows that can still improve, so late rounds touch only the
-    expanding rim. Lineage is truncated every second round and never on
-    the final one (``max_hops`` is fixed — no convergence probe rides the
-    checkpoint, so each skipped one is a job and a state write saved).
+    expanding rim.
     """
-    from pyspark.sql import functions as F
-
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct("s", "d"),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .distinct()
-        .transform(checkpoint)
-    )
-    dist = seeds.select(
-        F.col(seeds.columns[0]).alias("node"), F.lit(0).cast("int").alias("dist")
-    ).transform(checkpoint)
-    last_ckpt: DataFrame | None = None
-    for i in range(max_hops):
-        # relax only the RIM — nodes first reached in round i (dist == i).
-        # Lossless by the BFS invariant: distances never decrease under
-        # the min-merge, so a node settled at dist k < i was already
-        # relaxed in round k and re-relaxing it can only re-derive
-        # nd = k + 1 <= existing. The frontier join's dist side shrinks
-        # from |reached so far| to |newly reached| (guide §2.3: shuffle
-        # the rim, not the accumulated state).
-        frontier = dist.filter(F.col("dist") == F.lit(i))
-        relaxed = (
-            e.join(frontier, e.s == frontier.node)
-            .groupBy(F.col("d").alias("node2"))
-            .agg((F.min("dist") + F.lit(1)).alias("nd"))
-        )
-        dist = dist.join(relaxed, dist.node == F.col("node2"), "full").select(
-            F.coalesce(F.col("node"), F.col("node2")).alias("node"),
-            F.least(
-                F.coalesce(F.col("dist"), F.lit(2147483647)),
-                F.coalesce(F.col("nd"), F.lit(2147483647)),
-            ).alias("dist"),
-        )
-        if (i + 1) % 2 == 0 and i < max_hops - 1:
-            dist = checkpoint(dist, supersedes=last_ckpt)
-            last_ckpt = dist
-    return dist
+    return _bfs(edges, seeds, src, dst, max_hops, ["node"])
 
 
 def bfs_distances_per_seed(
@@ -809,62 +808,12 @@ def bfs_distances_per_seed(
     collapses to nearest-seed form, kept seed-keyed so per-seed
     statistics (closeness, reach, ego-net size) can aggregate over it.
 
-    Same loop shape as ``bfs_distances`` with the seed id carried through
-    the relax/merge keys: per round one frontier⋈edges shuffle + a
+    Same loop as ``bfs_distances`` with the seed id carried through the
+    relax/merge keys: per round one frontier⋈edges shuffle + a
     (seed, node)-keyed integer min. State is one row per (seed, reached
     node) — fan-out is bounded by seeds x ego-net size, so the seed set
     must be bounded by construction (sampled probes, trusted roots), not
     corpus-proportional: at a corpus-scaled seed count prefer
     ``bfs_distances``'s nearest-seed collapse.
     """
-    from pyspark.sql import functions as F
-
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct("s", "d"),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .distinct()
-        .transform(checkpoint)
-    )
-    dist = seeds.select(
-        F.col(seeds.columns[0]).alias("seed"),
-        F.col(seeds.columns[0]).alias("node"),
-        F.lit(0).cast("int").alias("dist"),
-    ).transform(checkpoint)
-    last_ckpt: DataFrame | None = None
-    for i in range(max_hops):
-        # rim-only relaxation, per seed — the ``bfs_distances`` argument
-        # applies pointwise per (seed, node): a (seed, node) pair settled
-        # at dist k < i re-derives only nd = k + 1 <= existing
-        frontier = dist.filter(F.col("dist") == F.lit(i))
-        relaxed = (
-            e.join(frontier, e.s == frontier.node)
-            .groupBy("seed", F.col("d").alias("node2"))
-            .agg((F.min("dist") + F.lit(1)).alias("nd"))
-            .withColumnRenamed("seed", "seed2")
-        )
-        dist = dist.join(
-            relaxed,
-            (dist.seed == F.col("seed2")) & (dist.node == F.col("node2")),
-            "full",
-        ).select(
-            F.coalesce(F.col("seed"), F.col("seed2")).alias("seed"),
-            F.coalesce(F.col("node"), F.col("node2")).alias("node"),
-            F.least(
-                F.coalesce(F.col("dist"), F.lit(2147483647)),
-                F.coalesce(F.col("nd"), F.lit(2147483647)),
-            ).alias("dist"),
-        )
-        # fixed-hop loop — truncate every second round, never the final
-        # one (the ``bfs_distances`` rationale)
-        if (i + 1) % 2 == 0 and i < max_hops - 1:
-            dist = checkpoint(dist, supersedes=last_ckpt)
-            last_ckpt = dist
-    return dist
+    return _bfs(edges, seeds, src, dst, max_hops, ["seed", "node"])

@@ -39,13 +39,13 @@ stages in executor memory.
 
 from __future__ import annotations
 
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
+from ntd_gtfs_to_socrata_spark.operators.graph import connected_components
 from ntd_gtfs_to_socrata_spark.operators.stagecache import release, stage_boundary
 
 # Candidate-generation document-frequency cap: a shingle appearing in more
@@ -55,6 +55,9 @@ from ntd_gtfs_to_socrata_spark.operators.stagecache import release, stage_bounda
 # DuckDB oracle applies the same cap, so the value hash certifies the
 # capped semantics, not an uncapped ideal.
 _NEARDUP_DF_CAP = 1000
+# Shingle Jaccard at or above which two surviving docs are near-duplicates
+# (the oracle's threshold too).
+_JACCARD_THRESHOLD = 0.5
 
 
 @dataclass
@@ -62,6 +65,7 @@ class CorpusReleaseResult:
     released: DataFrame  # doc_id, text, lang, source, split
     manifest: dict  # per-stage counts (filled after an action runs)
     observations: dict  # name -> Observation (driver reads post-action)
+    docs: DataFrame  # the input documents
 
     def close(self) -> None:
         """Release the stage-boundary caches (idempotent)."""
@@ -99,34 +103,15 @@ def _keep_rules(docs: DataFrame) -> DataFrame:
     )
 
 
-def build_release(
-    spark: SparkSession,
-    sf_dir: str,
-    jaccard_threshold: float = 0.5,
-    cc_algorithm: str = "propagation",
-) -> CorpusReleaseResult:
-    """Assemble the release plan. ``cc_algorithm`` selects the
-    connected-components implementation for the near-dup cluster step:
-    ``"propagation"`` (min-label, default) or ``"star"`` (large-star/
-    small-star, the diameter-safe O(log n) variant) — both produce the
-    min-node component labeling, so the released corpus is IDENTICAL
-    under either (asserted in tests/test_corpus_release.py)."""
+def build_release(spark: SparkSession, sf_dir: str) -> CorpusReleaseResult:
+    """Assemble the release plan; nothing runs until the caller's action."""
     from ntd_gtfs_to_socrata_spark.io import load_table
-    from ntd_gtfs_to_socrata_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
 
-    if cc_algorithm not in ("propagation", "star"):
-        raise ValueError(f"unknown cc_algorithm: {cc_algorithm!r}")
     docs = load_table(spark, sf_dir, "documents")
-    # Observation names are session-unique; suffix so repeated builds in
-    # one session (idempotency tests, retries) don't collide
-    run_id = uuid.uuid4().hex[:8]
-    obs: dict[str, Observation] = {
-        k: Observation(f"{k}_{run_id}")
-        for k in ("input", "ruled", "exact", "neardup", "decon")
-    }
+    # one counter per stage, in pipeline order (write_release relies on
+    # it); unnamed Observations get a random UUID name, so repeated
+    # builds in one session never collide
+    obs = {k: Observation() for k in ("input", "ruled", "exact", "neardup", "decon")}
 
     staged = docs.observe(obs["input"], F.count(F.lit(1)).alias("n"))
     ruled = _keep_rules(staged).observe(obs["ruled"], F.count(F.lit(1)).alias("n"))
@@ -186,14 +171,11 @@ def build_release(
         .filter(
             F.col("nc").cast("double")
             / (F.col("na") + F.col("nb") - F.col("nc"))
-            >= jaccard_threshold
+            >= _JACCARD_THRESHOLD
         )
         .select("doc_a", "doc_b")
     )
-    cc_fn = connected_components if cc_algorithm == "propagation" else (
-        connected_components_star
-    )
-    cc = cc_fn(pairs, src="doc_a", dst="doc_b")
+    cc = connected_components(pairs, src="doc_a", dst="doc_b")
     drop = (
         cc.groupBy("component_id")
         .agg(F.min("node").alias("keep"), F.collect_list("node").alias("members"))
@@ -240,16 +222,33 @@ def build_release(
         F.when(bucket < 80, "train").when(bucket < 90, "validation").otherwise("test")
     )
     released = decon.withColumn("split", split)
-    return CorpusReleaseResult(released=released, manifest={}, observations=obs)
+    return CorpusReleaseResult(
+        released=released, manifest={}, observations=obs, docs=docs
+    )
 
 
 def write_release(result: CorpusReleaseResult, out_dir: str) -> dict:
     """Write partitioned by split, then read every stage counter from its
     Observation (ONE job, no per-counter rescans) into the manifest, then
-    release the stage-boundary caches (r6 ADVICE: no leaked persists)."""
-    result.released.write.mode("overwrite").partitionBy("split").parquet(out_dir)
-    manifest = {name: o.get["n"] for name, o in result.observations.items()}
+    release the stage-boundary caches (r6 ADVICE: no leaked persists).
+
+    A release that keeps no document reads no counter but the near-dup
+    stage's: every stage keeps a subset of the rules' survivors, and a
+    survivor always survives dedup, so an empty near-dup stage means that
+    every stage is empty. The ``input`` to ``exact`` counters then sit
+    under a join that AQE pruned to an empty relation, which reports no
+    metrics (``Observation.get`` fails), so that path alone counts the
+    input documents with a job of its own."""
+    obs = result.observations
+    try:
+        result.released.write.mode("overwrite").partitionBy("split").parquet(out_dir)
+        if obs["neardup"].get["n"] == 0:
+            manifest = dict.fromkeys(obs, 0)
+            manifest["input"] = result.docs.count()
+        else:
+            manifest = {name: o.get["n"] for name, o in obs.items()}
+    finally:
+        result.close()
     manifest["released"] = manifest["decon"]
     result.manifest.update(manifest)
-    result.close()
     return manifest

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ntd_gtfs_to_socrata_spark.operators.graph import undirected
 from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 from ntd_gtfs_to_socrata_spark.queries.dedup_text import (
@@ -74,20 +75,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ntd_gtfs_to_socrata_spark.operators.graph import pagerank
 
     pairs = _ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP)
-    # symmetric edges from ONE pass over the pair generator (explode, not
-    # union — a union re-executes the inverted-index subtree per branch)
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                ),
-                F.struct(
-                    F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    edges = undirected(pairs, "doc_a", "doc_b", "src", "dst")
     ranks = pagerank(edges, iterations=_PR_ITERS, damping=_PR_DAMP)
     return ranks.select(
         F.col("node").alias("doc_id"), F.round("rank", 4).alias("pr")
@@ -347,19 +335,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ntd_gtfs_to_socrata_spark.operators.graph import label_propagation
 
     pairs = _ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP)
-    # symmetric edges via explode, not union — one pair-generator execution
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                ),
-                F.struct(
-                    F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    edges = undirected(pairs, "doc_a", "doc_b", "src", "dst")
     labels = label_propagation(edges, iterations=_LPA_ITERS)
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -606,14 +582,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         .transform(checkpoint)
     )
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("x"), F.col("doc_b").alias("y")),
-                F.struct(F.col("doc_b").alias("x"), F.col("doc_a").alias("y")),
-            )
-        ).alias("e")
-    ).select("e.x", "e.y")
+    edges = undirected(pairs, "doc_a", "doc_b", "x", "y")
     deg = edges.groupBy("x").agg(F.count(F.lit(1)).alias("d"))
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
@@ -785,14 +754,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .transform(checkpoint)
     )
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    edges = undirected(pairs, "doc_a", "doc_b", "src", "dst")
     labels = checkpoint(label_propagation(edges, iterations=_LPA_ITERS))
     la = labels.select(F.col("node").alias("doc_a"), F.col("label").alias("lab_a"))
     lb = labels.select(F.col("node").alias("doc_b"), F.col("label").alias("lab_b"))
@@ -899,14 +861,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .transform(checkpoint)
     )
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    edges = undirected(pairs, "doc_a", "doc_b", "src", "dst")
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )

@@ -134,7 +134,7 @@ def release_pipeline_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     powered), the oracle replays every stage declaratively including a
     recursive-CTE connected components — so the value hash certifies the
     COMPOSITION end to end."""
-    released = build_release(spark, sf_dir, jaccard_threshold=0.5).released
+    released = build_release(spark, sf_dir).released
     return released.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import ensure_min_parallelism, load_table
+from ntd_gtfs_to_socrata_spark.operators.graph import undirected
 from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 
@@ -1594,18 +1595,7 @@ def sim_nn_descent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .transform(checkpoint)
     )
-    sym = (
-        g0.select(
-            F.explode(
-                F.array(
-                    F.struct("src", "dst"),
-                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-                )
-            ).alias("p")
-        )
-        .select("p.src", "p.dst")
-        .distinct()
-    )
+    sym = undirected(g0, "src", "dst", "src", "dst").distinct()
     s1 = sym.alias("s1")
     s2 = sym.alias("s2")
     twohop = (
@@ -1945,18 +1935,7 @@ def _gs_search_graph(spark: SparkSession, sf_dir: str):
         .transform(checkpoint)
     )
     for rnd in range(2):  # NN-descent repair rounds
-        sym = (
-            g.select(
-                F.explode(
-                    F.array(
-                        F.struct("src", "dst"),
-                        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-                    )
-                ).alias("p")
-            )
-            .select("p.*")
-            .distinct()
-        )
+        sym = undirected(g, "src", "dst", "src", "dst").distinct()
         x, y = sym.alias("x"), sym.alias("y")
         twohop = x.join(
             y, (F.col("y.src") == F.col("x.dst")) & (F.col("y.dst") != F.col("x.src"))

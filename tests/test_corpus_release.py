@@ -43,16 +43,23 @@ def test_release_idempotent(spark, sf_dir, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_release_identical_under_star_cc(spark, sf_dir):
-    """r6 verdict item: the diameter-safe large-star/small-star CC must be
-    a drop-in for min-label propagation AT THE COMPOSITION LEVEL — the
-    released corpus (doc ids and splits) is identical under either."""
-    base = build_release(spark, sf_dir).released.select("doc_id", "split")
-    star = build_release(spark, sf_dir, cc_algorithm="star").released.select(
-        "doc_id", "split"
+def test_empty_release_writes_zero_manifest(spark, sf_dir, tmp_path, monkeypatch):
+    """A release that keeps no document writes a manifest of zeros (and
+    the true input count) and releases both stage scopes: the counters
+    under the joins AQE prunes to an empty relation report no metrics,
+    and are not read."""
+    from ntd_gtfs_to_socrata_spark.operators import stagecache
+    from ntd_gtfs_to_socrata_spark.plans import corpus_release as cr
+
+    monkeypatch.setattr(cr, "_keep_rules", lambda docs: docs.filter(F.col("doc_id") < 0))
+    out = str(tmp_path / "release")
+    res = build_release(spark, sf_dir)
+    manifest = write_release(res, out)
+    assert manifest.pop("input") == res.docs.count() > 0
+    assert manifest == dict.fromkeys(
+        ("ruled", "exact", "neardup", "decon", "released"), 0
     )
-    assert base.exceptAll(star).count() == 0
-    assert star.exceptAll(base).count() == 0
+    assert not any(s in stagecache._LIVE for s in cr.STAGE_SCOPES)
 
 
 def test_release_cache_lifecycle(spark, sf_dir, tmp_path):

@@ -4,6 +4,8 @@ seeded global window and stay quiet on properly partitioned ones."""
 
 from __future__ import annotations
 
+import ast
+import inspect
 import io
 import re
 import subprocess
@@ -347,3 +349,43 @@ def test_materialization_goes_through_stagecache():
     ``release``), so one module owns the local-vs-reliable choice and the
     cache lifecycle."""
     assert materialize_calls(REPO_ROOT / "ntd_gtfs_to_socrata_spark") == []
+
+
+# A loop's own round bookkeeping: a round-parity checkpoint gate, or the
+# last checkpointed frame kept by hand (the pre-runner idiom's names).
+_CADENCE = re.compile(r"%\s*\w+\s*==\s*\d+\s+and\b|\blast_ckpt\b|\btrunc_every\b")
+
+
+def loop_bookkeeping(package: Path) -> tuple[list[str], list[str]]:
+    """``path:line`` of every ``raise`` that mentions convergence or a
+    fixpoint, and of every line of checkpoint-cadence bookkeeping, in
+    ``package``."""
+    raises, cadence = [], []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        text = path.read_text()
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.Raise) and re.search(
+                r"converge|fixpoint", ast.get_source_segment(text, node), re.I
+            ):
+                raises.append(f"{rel}:{node.lineno}")
+        for n, line in enumerate(text.splitlines(), 1):
+            if _CADENCE.search(line):
+                cadence.append(f"{rel}:{n}")
+    return raises, cadence
+
+
+def test_loops_share_one_exhaustion_path():
+    """The package's only non-convergence raise is the fixpoint runner's,
+    and its only checkpoint cadence is the fixed-round runner's
+    (``operators/graph.py``), so a new loop cannot grow its own
+    exhaustion path or round bookkeeping."""
+    from ntd_gtfs_to_socrata_spark.operators import graph as G
+
+    def lines_of(fn) -> set[str]:
+        src, start = inspect.getsourcelines(fn)
+        return {f"operators/graph.py:{n}" for n in range(start, start + len(src))}
+
+    raises, cadence = loop_bookkeeping(REPO_ROOT / "ntd_gtfs_to_socrata_spark")
+    assert len(raises) == 1 and set(raises) <= lines_of(G._until_fixpoint), raises
+    assert cadence and set(cadence) <= lines_of(G._rounds), cadence
