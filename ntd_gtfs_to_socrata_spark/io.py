@@ -138,16 +138,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL surface."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin rebalance a DataFrame whose source yields fewer
     partitions than cores.

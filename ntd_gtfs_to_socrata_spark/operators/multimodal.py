@@ -1750,11 +1750,6 @@ def _jpeg_huff_lut(counts_syms: bytes):
     return sym_arr.tolist(), len_arr.tolist()
 
 
-def _jpeg_extend(v, size):
-    """T.81 EXTEND: map `size` magnitude bits to the signed value."""
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
 def _jpeg_idct_matrix():
     import numpy as np
 

@@ -31,9 +31,9 @@ def tokens(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
-def word_ngrams(toks: Column, n: int = 3, sep: str = " ") -> Column:
-    """All word n-grams (order-preserving, duplicates kept) via arrays_zip
-    of shifted slices.
+def word_ngrams(toks: Column, n: int = 3) -> Column:
+    """All space-joined word n-grams (order-preserving, duplicates kept)
+    via arrays_zip of shifted slices.
 
     NOT the obvious ``transform(sequence(...), i -> element_at(toks, i+k))``:
     Catalyst's CollapseProject inlines the tokenizer expression into every
@@ -48,12 +48,13 @@ def word_ngrams(toks: Column, n: int = 3, sep: str = " ") -> Column:
     ]
     zipped = F.arrays_zip(*shifted)
     full = F.filter(zipped, lambda x: x[str(n - 1)].isNotNull())
-    return F.transform(full, lambda x: F.concat_ws(sep, *[x[str(k)] for k in range(n)]))
+    return F.transform(full, lambda x: F.concat_ws(" ", *[x[str(k)] for k in range(n)]))
 
 
-def word_shingles(toks: Column, n: int = 3, sep: str = " ") -> Column:
-    """Distinct word n-gram shingles (the dedup/minhash base set)."""
-    return F.array_distinct(word_ngrams(toks, n, sep))
+def word_shingles(toks: Column) -> Column:
+    """Distinct word 3-gram shingles (the dedup/minhash base set; every
+    oracle hard-codes the same space-joined 3-grams)."""
+    return F.array_distinct(word_ngrams(toks))
 
 
 def poly_hash_sql(col_expr: str, n_chars: int) -> str:
@@ -134,18 +135,6 @@ def stopword_ratio(toks: Column, stopwords: list[str]) -> Column:
     sw = F.array(*[F.lit(s) for s in stopwords])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return n_stop.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
-def simhash16(token_hash_col: Column) -> list[Column]:
-    """Per-token ±1 bit votes for a 16-bit simhash; aggregate with
-    sum per bit then threshold > 0. Returns the 16 vote columns; callers
-    groupBy(doc) and combine via ``simhash_from_votes``."""
-    return [
-        F.when(((token_hash_col / F.lit(1 << b)).cast("long") % 2) == 1, 1).otherwise(-1).alias(
-            f"bit{b}"
-        )
-        for b in range(16)
-    ]
 
 
 def simhash_from_votes(vote_sums: list[Column]) -> Column:

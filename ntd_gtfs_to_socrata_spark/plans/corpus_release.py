@@ -46,6 +46,11 @@ from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
 from ntd_gtfs_to_socrata_spark.operators.graph import connected_components
+from ntd_gtfs_to_socrata_spark.operators.neardup import (
+    common_counts,
+    shingle_hashes,
+    shingle_pairs,
+)
 from ntd_gtfs_to_socrata_spark.operators.stagecache import release, stage_boundary
 
 # Candidate-generation document-frequency cap: a shingle appearing in more
@@ -135,42 +140,15 @@ def build_release(spark: SparkSession, sf_dir: str) -> CorpusReleaseResult:
     )
 
     # near-dup keep-one over the survivors: df-capped shared-shingle pairs
-    # (hashed keys, map-side i<j combos) -> jaccard >= t -> CC -> keep min
-    exploded = (
-        exact.select("doc_id", TX.word_shingles(TX.tokens(F.col("text"))).alias("sh"))
-        .select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("s"))
-        .select("doc_id", "n_sh", F.xxhash64("s").alias("shingle"))
-    )
-    inv = (
-        exploded.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ds"))
-        # df cap: drop posting lists longer than _NEARDUP_DF_CAP (pure
-        # boilerplate shingles) so per-key pair fan-out is bounded — the
-        # dedup_ngram_jaccard_dfcap posture; recall on genuinely similar
-        # pairs survives because near-dups share many RARE shingles too
-        .filter((F.size("ds") > 1) & (F.size("ds") <= _NEARDUP_DF_CAP))
-    )
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    # (hashed keys, map-side i<j combos) -> jaccard >= t -> CC -> keep min.
+    # The df cap drops boilerplate shingles' posting lists so per-key pair
+    # fan-out is bounded; recall on genuinely similar pairs survives
+    # because near-dups share many RARE shingles too.
     pairs = (
-        inv.select(F.explode(combos).alias("p"))
-        .groupBy(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.col("p.a.n_sh").alias("na"),
-            F.col("p.b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("nc"))
+        common_counts(shingle_pairs(shingle_hashes(exact), _NEARDUP_DF_CAP))
         .filter(
-            F.col("nc").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("nc"))
+            F.col("n_common").cast("double")
+            / (F.col("na") + F.col("nb") - F.col("n_common"))
             >= _JACCARD_THRESHOLD
         )
         .select("doc_a", "doc_b")

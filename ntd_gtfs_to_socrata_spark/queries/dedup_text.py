@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import ensure_min_parallelism, load_table
+from ntd_gtfs_to_socrata_spark.operators import neardup as ND
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
 from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint, stage_boundary
 from ntd_gtfs_to_socrata_spark.queries import register
@@ -98,38 +99,6 @@ def _ngram_jaccard(
 ) -> DataFrame:
     if docs is None:
         docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    # size travels with each exploded row so the pair aggregation needs no
-    # extra joins back to a per-doc size table; shingles are xxhash64'd to
-    # 8-byte join keys (64-bit collisions are negligible vs corpus shingle
-    # cardinality) so the shuffle never carries the 3-word strings
-    exploded = (
-        docs.select("doc_id", TX.word_shingles(TX.tokens(F.col("text"))).alias("sh"))
-        .select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle_s"))
-        .select("doc_id", "n_sh", F.xxhash64("shingle_s").alias("shingle"))
-    )
-    # inverted index: ONE shuffle on shingle builds the posting list, pairs
-    # are generated map-side from each list (vs a self-join, which shuffles
-    # the exploded table twice). At 100 TB, cap posting-list length first
-    # (document-frequency cut) so no single shingle key holds a huge list.
-    inv = (
-        exploded.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    if df_cap is not None:
-        inv = inv.filter(F.size("ds") <= df_cap)
-    # i<j combinations generated map-side from the sorted posting list: one
-    # explode of exactly L(L-1)/2 pair rows, vs a double explode of L^2 rows
-    # filtered afterwards (2x the rows and a second explode stage).
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     # size-compatibility prune BEFORE the pair shuffle: J(a,b) ≤
     # min(na,nb)/(na+nb-min) (common ≤ min), so J ≥ 0.2 requires
     # 6·min(na,nb) ≥ na+nb. Pure map-side filter; provably removes only
@@ -138,16 +107,8 @@ def _ngram_jaccard(
         F.least(F.col("p.a.n_sh"), F.col("p.b.n_sh")) * 6
         >= F.col("p.a.n_sh") + F.col("p.b.n_sh")
     )
-    pairs = (
-        inv.select(F.explode(combos).alias("p"))
-        .filter(compatible)
-        .groupBy(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.col("p.a.n_sh").alias("na"),
-            F.col("p.b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    pairs = ND.common_counts(
+        ND.shingle_pairs(ND.shingle_hashes(docs), df_cap).filter(compatible)
     )
     jac = pairs.withColumn(
         "jaccard_raw",
@@ -261,15 +222,6 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n_sh", "pos"))).alias("ds"))
         .filter(F.size("ds") > 1)
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     # same lossless size-compatibility prune as _ngram_jaccard: J ≥ 0.2
     # requires 6·min(na,nb) ≥ na+nb
     compatible = (
@@ -288,7 +240,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single rare-token collisions whose suffix bound kills them).
     # Provably lossless: the bound over-counts overlap, never under.
     cands = (
-        inv.select(F.explode(combos).alias("p"))
+        inv.select(F.explode(ND.pairs_within("ds")).alias("p"))
         .filter(compatible)
         .groupBy(
             F.col("p.a.doc_id").alias("doc_a"),
@@ -410,25 +362,12 @@ def dedup_keep_one_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actionable end of the dedup pipeline: pairs → components →
     keep exactly one doc (the min id) per near-dup cluster, singletons kept
     as themselves. ``kept`` is the per-doc retain/drop verdict a training
-    pipeline filters on.
-
-    Scale posture: the corpus-sized side is touched by one LEFT join
-    against the component map.  No forced broadcast: on real web corpora
-    30-50 % of documents land in near-dup clusters, so the component map
-    can itself be billions of rows -- AQE sizes the join at runtime and
-    broadcasts only when the map is actually under the threshold."""
-    from ntd_gtfs_to_socrata_spark.operators.graph import connected_components
-
-    pairs = _ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP)
-    cc = connected_components(pairs, src="doc_a", dst="doc_b").select(
-        F.col("node"), F.col("component_id").alias("comp")
-    )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    comp = F.coalesce(F.col("comp"), F.col("doc_id"))
-    return docs.join(cc, docs.doc_id == cc.node, "left").select(
-        "doc_id",
-        comp.alias("component_id"),
-        (comp == F.col("doc_id")).alias("kept"),
+    pipeline filters on (scale posture: ``neardup.keep_one``)."""
+    return ND.keep_one(
+        load_table(spark, sf_dir, "documents").select("doc_id"),
+        _ngram_jaccard(spark, sf_dir, df_cap=AUDIT_DF_CAP),
+        "doc_a",
+        "doc_b",
     )
 
 
@@ -492,8 +431,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash (engine-portable) near-dup signatures
 # ---------------------------------------------------------------------------
 
-_MINHASH_PERMS = [(1 + 2 * i, 7919 * i + 13) for i in range(8)]
-
 MINHASH_ORACLE = """
 WITH toks AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents
@@ -514,7 +451,7 @@ FROM hashed GROUP BY doc_id
     poly=TX.poly_hash_horner_sql("sh"),
     mins=", ".join(
         f"min((h * {a} + {b}) % {TX.HASH_MOD}) AS mh{i}"
-        for i, (a, b) in enumerate(_MINHASH_PERMS)
+        for i, (a, b) in enumerate(ND.MINHASH_PERMS)
     ),
 )
 
@@ -526,30 +463,12 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     components into 4 bands of 2 gives LSH candidate buckets — see
     ``dedup_minhash_lsh_pairs`` for the banded join."""
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    shingled = docs.select(
-        "doc_id", F.explode(TX.word_shingles(TX.tokens(F.col("text")))).alias("sh")
-    )
-    hashed = shingled.select(
-        "doc_id", TX.char_poly_hash_horner(F.col("sh")).alias("h")
-    )
-    return hashed.groupBy("doc_id").agg(
-        *[
-            F.min(TX.minhash_value(F.col("h"), a, b)).alias(f"mh{i}")
-            for i, (a, b) in enumerate(_MINHASH_PERMS)
-        ]
+    return ND.minhash_signatures(
+        docs.select(
+            "doc_id", F.explode(TX.word_shingles(TX.tokens(F.col("text")))).alias("sh")
+        )
     )
 
-
-# Per-bucket membership cap: a band bucket with L members contributes
-# L(L-1)/2 candidate pairs, so one degenerate bucket (a mega-cluster of
-# identical boilerplate the exact-dedup pass upstream would catch, or an
-# adversarial hash pile-up) can dominate the whole candidate volume. A
-# bucket over the cap is dropped wholesale — bounded fan-out per key, and
-# SQL-expressible so the candidate set stays value-hash checked. True
-# near-dup pairs inside a dropped bucket usually still surface through
-# one of the other 3 bands; the standing recall monitor
-# (``dedup_lsh_recall``) prices the residual loss.
-LSH_BUCKET_CAP = 256
 
 LSH_PAIRS_ORACLE = f"""
 WITH sigs AS MATERIALIZED ({MINHASH_ORACLE}),
@@ -561,7 +480,7 @@ bands AS MATERIALIZED (
 ),
 kept_buckets AS (
   SELECT band, x, y FROM bands
-  GROUP BY band, x, y HAVING count(*) BETWEEN 2 AND {LSH_BUCKET_CAP}
+  GROUP BY band, x, y HAVING count(*) BETWEEN 2 AND {ND.LSH_BUCKET_CAP}
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bands a
@@ -580,44 +499,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The banding math is deterministic integer arithmetic, so the full
     candidate SET is value-hash checked against a SQL replay of the
     signature + band join."""
-    sigs = dedup_minhash(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        *[
-            F.concat_ws(
-                "_", F.lit(i), F.col(f"mh{2 * i}"), F.col(f"mh{2 * i + 1}")
-            ).alias(f"band{i}")
-            for i in range(4)
-        ],
-    )
-    stacked = bands.selectExpr(
-        "doc_id",
-        "stack(4, band0, band1, band2, band3) AS bucket",
-    )
-    # One shuffle on bucket (vs a self-join's two), then i<j combinations
-    # generated map-side from each bucket's sorted member list — the same
-    # inverted-index shape as dedup_ngram_jaccard. Bucket membership is
-    # capped (LSH_BUCKET_CAP) so a degenerate band value can't
-    # quadratic-blow-up the combo explode.
-    buckets = (
-        stacked.groupBy("bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= LSH_BUCKET_CAP))
-    )
-    combos = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(combos).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
+    return ND.bucket_pairs(ND.lsh_buckets(dedup_minhash(spark, sf_dir))).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -691,8 +573,6 @@ def dedup_lsh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, component_id, kept) so downstream filters are drop-in; note
     LSH recall < 1 means the two queries may legitimately differ on
     pairs LSH missed — each is checked against its own oracle."""
-    from ntd_gtfs_to_socrata_spark.operators.graph import connected_components
-
     cands = stage_boundary(
         dedup_minhash_lsh_pairs(spark, sf_dir), "dedup_lsh_pipeline.cands"
     )
@@ -724,17 +604,7 @@ def dedup_lsh_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("sh_a") + F.size("sh_b") - n_common
     )
     verified = joined.filter(jac >= 0.2).select("doc_a", "doc_b")
-    cc = connected_components(verified, src="doc_a", dst="doc_b").select(
-        F.col("node"), F.col("component_id").alias("comp")
-    )
-    comp = F.coalesce(F.col("comp"), F.col("doc_id"))
-    return docs.select("doc_id").join(
-        cc, F.col("doc_id") == F.col("node"), "left"
-    ).select(
-        "doc_id",
-        comp.alias("component_id"),
-        (comp == F.col("doc_id")).alias("kept"),
-    )
+    return ND.keep_one(docs.select("doc_id"), verified, "doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -2135,16 +2005,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the string-based oracle still hash-matches) and pushes the
     batch/index split predicates into the verification scans so each
     side reads only its partition — measured 2.1× on the whole query."""
-    sigs = dedup_minhash(spark, sf_dir)
-    stacked = sigs.select(
-        "doc_id",
-        *[
-            F.concat_ws(
-                "_", F.lit(i), F.col(f"mh{2 * i}"), F.col(f"mh{2 * i + 1}")
-            ).alias(f"band{i}")
-            for i in range(4)
-        ],
-    ).selectExpr("doc_id", "stack(4, band0, band1, band2, band3) AS bucket")
+    stacked = ND.lsh_buckets(dedup_minhash(spark, sf_dir))
     new_b = stacked.filter(F.col("doc_id") % 5 == 0).select(
         F.col("doc_id").alias("new_id"), "bucket"
     )
@@ -2250,37 +2111,7 @@ def _containment(
     frame for synthetic-corpus tests."""
     if docs is None:
         docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    exploded = (
-        docs.select("doc_id", TX.word_shingles(TX.tokens(F.col("text"))).alias("sh"))
-        .select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle_s"))
-        .select("doc_id", "n_sh", F.xxhash64("shingle_s").alias("shingle"))
-    )
-    inv = (
-        exploded.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    if df_cap is not None:
-        inv = inv.filter(F.size("ds") <= df_cap)
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    pairs = (
-        inv.select(F.explode(combos).alias("p"))
-        .groupBy(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.col("p.a.n_sh").alias("na"),
-            F.col("p.b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    pairs = ND.common_counts(ND.shingle_pairs(ND.shingle_hashes(docs), df_cap))
     # both directed edges from ONE pass over the pair aggregate (an
     # explode of the 2-element direction array, not a union of two
     # branches — a union re-lists the whole inverted-index subtree per
@@ -2607,35 +2438,7 @@ def dedup_containment_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     the UNION ALL working set is bounded by paths in a near-dup DAG —
     tiny. The final GROUP BY dedupes path multiplicity."""
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    exploded = (
-        docs.select("doc_id", TX.word_shingles(TX.tokens(F.col("text"))).alias("sh"))
-        .select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle_s"))
-        .select("doc_id", "n_sh", F.xxhash64("shingle_s").alias("shingle"))
-    )
-    inv = (
-        exploded.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    pairs = (
-        inv.select(F.explode(combos).alias("p"))
-        .groupBy(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.col("p.a.n_sh").alias("na"),
-            F.col("p.b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    pairs = ND.common_counts(ND.shingle_pairs(ND.shingle_hashes(docs)))
     small_first = pairs.select(
         F.when(F.col("na") < F.col("nb"), F.col("doc_a")).otherwise(F.col("doc_b")).alias("src"),
         F.when(F.col("na") < F.col("nb"), F.col("doc_b")).otherwise(F.col("doc_a")).alias("dst"),

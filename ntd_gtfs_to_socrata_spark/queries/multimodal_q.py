@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import ensure_min_parallelism, load_table
 from ntd_gtfs_to_socrata_spark.operators import multimodal as MM
+from ntd_gtfs_to_socrata_spark.operators.neardup import pairs_within
 from ntd_gtfs_to_socrata_spark.queries import register
 
 # payload size = text bytes + container header: PNG header is 33 bytes
@@ -270,15 +271,6 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("s")).alias("ds"))
         .filter(F.size("ds") > 1)
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     hamming = (
         F.bit_count(F.col("p.a.b0").bitwiseXOR(F.col("p.b.b0")))
         + F.bit_count(F.col("p.a.b1").bitwiseXOR(F.col("p.b.b1")))
@@ -286,7 +278,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.bit_count(F.col("p.a.b3").bitwiseXOR(F.col("p.b.b3")))
     )
     return (
-        inv.select(F.explode(combos).alias("p"))
+        inv.select(F.explode(pairs_within("ds")).alias("p"))
         .select(
             F.col("p.a.doc_id").alias("doc_a"),
             F.col("p.b.doc_id").alias("doc_b"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import ensure_min_parallelism, load_table
 from ntd_gtfs_to_socrata_spark.operators.graph import undirected
+from ntd_gtfs_to_socrata_spark.operators.neardup import keep_one
 from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 from ntd_gtfs_to_socrata_spark.queries import register
 
@@ -613,22 +614,13 @@ def sim_embedding_dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline as [[dedup_keep_one_per_cluster]], proving the graph operator
     is modality-agnostic. At 100 TB the pair stage routes through LSH
     buckets / IVF cells instead of the bounded exact cross join."""
-    from ntd_gtfs_to_socrata_spark.operators.graph import connected_components
-
-    pairs = sim_neardup_pairs(spark, sf_dir).select("id_a", "id_b")
-    cc = connected_components(pairs, src="id_a", dst="id_b").select(
-        F.col("node"), F.col("component_id").alias("comp")
-    )
     vecs = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < 200)
         .select("vec_id")
     )
-    comp = F.coalesce(F.col("comp"), F.col("vec_id"))
-    return vecs.join(cc, vecs.vec_id == cc.node, "left").select(
-        "vec_id",
-        comp.alias("component_id"),
-        (comp == F.col("vec_id")).alias("kept"),
+    return keep_one(
+        vecs, sim_neardup_pairs(spark, sf_dir).select("id_a", "id_b"), "id_a", "id_b"
     )
 
 

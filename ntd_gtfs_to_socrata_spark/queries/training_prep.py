@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import ensure_min_parallelism, load_table
+from ntd_gtfs_to_socrata_spark.operators import neardup as ND
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
 from ntd_gtfs_to_socrata_spark.queries import register
 
@@ -1339,16 +1340,7 @@ def tp_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ntd_gtfs_to_socrata_spark.queries.dedup_text import dedup_minhash
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    sigs = dedup_minhash(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        *[
-            F.concat_ws(
-                "_", F.lit(i), F.col(f"mh{2 * i}"), F.col(f"mh{2 * i + 1}")
-            ).alias(f"band{i}")
-            for i in range(4)
-        ],
-    ).selectExpr("doc_id", "stack(4, band0, band1, band2, band3) AS bucket")
+    bands = ND.lsh_buckets(dedup_minhash(spark, sf_dir))
     # the train/eval branches would each re-execute the corpus-sized
     # signature aggregation (measured r8: 8 executed / 0 reused before
     # this boundary) — materialize the small (doc_id, bucket) frame once.
@@ -1373,20 +1365,16 @@ def tp_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("train_id", "eval_id")
         .distinct()
     )
-    shingled = docs.select(
-        "doc_id", TX.word_shingles(TX.tokens(F.col("text"))).alias("sh")
-    ).select(
-        "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("s")
-    ).select("doc_id", "n_sh", F.xxhash64("s").alias("h"))
+    shingled = ND.shingle_hashes(docs)
     a = shingled.select(
-        F.col("doc_id").alias("train_id"), F.col("n_sh").alias("na"), "h"
+        F.col("doc_id").alias("train_id"), F.col("n_sh").alias("na"), "shingle"
     )
     b = shingled.select(
-        F.col("doc_id").alias("eval_id"), F.col("n_sh").alias("nb"), "h"
+        F.col("doc_id").alias("eval_id"), F.col("n_sh").alias("nb"), "shingle"
     )
     common = (
         cand.join(a, "train_id")
-        .join(b, ["eval_id", "h"])
+        .join(b, ["eval_id", "shingle"])
         .groupBy("train_id", "eval_id", "na", "nb")
         .agg(F.count(F.lit(1)).alias("nc"))
     )

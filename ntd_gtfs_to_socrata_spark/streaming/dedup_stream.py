@@ -7,12 +7,11 @@ batch).
 
 Per micro-batch (``foreachBatch``):
 
-1. band signatures + distinct-shingle hashes for the batch's docs
-   (identical arithmetic to ``dedup_minhash_lsh_pairs`` — the
-   SQL-replayable polynomial hash, 8 permutations, 4 bands × 2 rows);
-2. candidate pairs = batch-internal band collisions (map-side i<j combos
-   from sorted bucket member lists — the inverted-index shape, never a
-   self-join) ∪ batch × HISTORICAL-INDEX band collisions (asymmetric join
+1. LSH band buckets + distinct-shingle hashes for the batch's docs
+   (``operators/neardup.py``, the same steps ``dedup_lsh_pipeline`` runs);
+2. candidate pairs = batch-internal band collisions (``bucket_pairs``:
+   map-side i<j pairs from sorted bucket member lists, never a self-join)
+   ∪ batch × HISTORICAL-INDEX band collisions (asymmetric join
    new-vs-index, the ``dedup_incremental_lsh`` posture);
 3. exact-Jaccard verification on the candidates only, against the shingle
    state of exactly the docs named in a candidate pair;
@@ -21,9 +20,9 @@ Per micro-batch (``foreachBatch``):
    rewrites its own partition instead of duplicating rows, so the sink is
    effectively-once under task retry (the S7/S9 idempotency discipline).
 
-After the AvailableNow drain, connected components over the accumulated
-edge set + min-id keep-one produce the SAME (doc_id, component_id, kept)
-frame as the batch ``dedup_lsh_pipeline`` — provably: the union over
+After the AvailableNow drain, ``neardup.keep_one`` over the accumulated
+edge set produces the SAME (doc_id, component_id, kept) frame as the
+batch ``dedup_lsh_pipeline`` — provably: the union over
 batches of (internal ∪ batch×history) band collisions IS the full band
 collision set, Jaccard verification is per-pair, and CC/keep-one are
 order-independent. The batch pipeline's PER-BUCKET CAP (LSH_BUCKET_CAP:
@@ -62,10 +61,17 @@ from pyspark.sql import functions as F
 
 from ntd_gtfs_to_socrata_spark.io import load_table
 from ntd_gtfs_to_socrata_spark.operators import textops as TX
+from ntd_gtfs_to_socrata_spark.operators.neardup import (
+    LSH_BUCKET_CAP,
+    bucket_pairs,
+    keep_one,
+    lsh_buckets,
+    minhash_signatures,
+    shingle_hashes,
+)
 from ntd_gtfs_to_socrata_spark.operators.stagecache import checkpoint
 
 _JACCARD_T = 0.2  # dedup_lsh_pipeline's verification threshold
-_N_BANDS = 4
 _STATE_BUCKETS = 8  # compacted-state bucket count (cluster: size to cores)
 
 # at most one live work dir per session: a new run retires the previous
@@ -92,65 +98,6 @@ def _retire_previous() -> None:
 
 
 atexit.register(_retire_previous)
-
-
-def _minhash_perms() -> list[tuple[int, int]]:
-    # single source of truth: the batch query module's permutation table
-    from ntd_gtfs_to_socrata_spark.queries.dedup_text import _MINHASH_PERMS
-
-    return _MINHASH_PERMS
-
-
-def _bucket_cap() -> int:
-    # single source of truth: the batch query module's bucket cap (the
-    # shared oracle bakes this value into its SQL)
-    from ntd_gtfs_to_socrata_spark.queries.dedup_text import LSH_BUCKET_CAP
-
-    return LSH_BUCKET_CAP
-
-
-def _band_signatures(shingled: DataFrame) -> DataFrame:
-    """(doc_id, bucket) — 4 bands × 2 minhash rows, identical construction
-    to ``dedup_minhash_lsh_pairs`` (queries/dedup_text.py). Input is the
-    shared (doc_id, sh: array<string>) frame — shingling happens once per
-    batch, upstream."""
-    perms = _minhash_perms()
-    hashed = shingled.select(
-        "doc_id", F.explode("sh").alias("s")
-    ).select("doc_id", TX.char_poly_hash_horner(F.col("s")).alias("h"))
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min(TX.minhash_value(F.col("h"), a, b)).alias(f"mh{i}")
-            for i, (a, b) in enumerate(perms)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id",
-        *[
-            F.concat_ws(
-                "_", F.lit(i), F.col(f"mh{2 * i}"), F.col(f"mh{2 * i + 1}")
-            ).alias(f"band{i}")
-            for i in range(_N_BANDS)
-        ],
-    )
-    return bands.selectExpr(
-        "doc_id", f"stack({_N_BANDS}, band0, band1, band2, band3) AS bucket"
-    )
-
-
-def _shingle_hashes(shingled: DataFrame) -> DataFrame:
-    """(doc_id, h, n_sh) — one row per DISTINCT shingle with the doc's
-    distinct-shingle count carried alongside (the Jaccard denominators).
-    Full-string ``xxhash64`` (the ``dedup_ngram_jaccard`` convention:
-    hash equality stands in for string equality w.h.p., and the string
-    shingles never enter the state shuffle) — NOT the 8-char poly hash,
-    whose prefix collisions would inflate the intersection count. Input
-    is the shared (doc_id, sh: array<string>) frame."""
-    return (
-        shingled
-        .select("doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("s"))
-        .select("doc_id", "n_sh", F.xxhash64("s").alias("h"))
-    )
 
 
 def _has_part_files(path: str) -> bool:
@@ -323,13 +270,12 @@ def _write_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
     ).partitionBy("epoch").parquet(path)
 
 
-def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
+def _make_apply_batch(bands_state, shingles_state, edges_path):
     """Bind the per-micro-batch incremental-LSH body to a state pair +
     edge sink. Shared by the file-staged AvailableNow harness
     (incremental_lsh_dedup) and the unbounded rate-source harness
     (rate_incremental_lsh_dedup) — the algorithm is identical, only the
     source and the drain policy differ."""
-    _BUCKET_CAP = bucket_cap
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         import time as _time
@@ -362,7 +308,7 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
         # small frames that downstream actually reuses)
         shingled = batch_df.select(
             "doc_id", TX.word_shingles(TX.tokens(F.col("text"))).alias("sh")
-        )
+        ).select("doc_id", F.explode("sh").alias("sh"))
         # the two independent checkpoint jobs run on parallel driver
         # threads (same pattern as the state commits below): each is a
         # small-task job that leaves most of the 32 cores idle, so
@@ -373,38 +319,20 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
 
         with _TPE(max_workers=2) as _pool:
             _fb = _pool.submit(
-                lambda: checkpoint(_band_signatures(shingled))
+                lambda: checkpoint(lsh_buckets(minhash_signatures(shingled)))
             )
-            _fs = _pool.submit(
-                lambda: checkpoint(_shingle_hashes(shingled))
-            )
+            _fs = _pool.submit(lambda: checkpoint(shingle_hashes(batch_df)))
             bands = _fb.result()
             shingles = _fs.result()
         _mark("signatures")
 
-        # batch-internal candidates: inverted-index i<j combos per bucket.
+        # batch-internal candidates: inverted-index i<j pairs per bucket.
         # Buckets already over LSH_BUCKET_CAP on batch members alone are
         # dropped here — their FINAL size is necessarily over the cap, so
         # the batch pipeline (whose oracle this stream shares) excludes
         # every pair they would justify; buckets that only grow past the
         # cap in LATER epochs are handled by the post-drain filter below.
-        buckets = (
-            bands.groupBy("bucket")
-            .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-            .filter((F.size("ids") > 1) & (F.size("ids") <= _BUCKET_CAP))
-        )
-        combos = F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        )
-        internal = buckets.select(F.explode(combos).alias("p")).select(
-            F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b")
-        )
+        internal = bucket_pairs(bands)
 
         # batch × history: asymmetric band join new-vs-index; canonical
         # (min, max) orientation matches the batch pipeline's a < b pairs.
@@ -471,7 +399,7 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
                 batch_counts.join(hist_counts, "bucket", "left")
                 .filter(
                     F.col("n_new") + F.coalesce(F.col("n_old"), F.lit(0))
-                    > _BUCKET_CAP
+                    > LSH_BUCKET_CAP
                 )
                 .select("bucket")
                 .transform(checkpoint)  # reused by both cross joins
@@ -503,7 +431,7 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
         # exact-Jaccard verify on candidates only, over batch ∪ state
         # shingles (every candidate names at least one batch doc; its
         # partner is either in-batch or in state). NOTE a deliberate
-        # local-vs-cluster trade: the (doc_b, h) join shuffles the
+        # local-vs-cluster trade: the (doc_b, shingle) join shuffles the
         # shingle union, which includes the accumulated state — at true
         # stream lifetimes the right shape is a broadcast semi-join
         # reducing each side to candidate docs first (candidate sets are
@@ -513,14 +441,14 @@ def _make_apply_batch(bands_state, shingles_state, edges_path, bucket_cap):
         # snapshot keeps the state side exchange-free once it dominates.
         all_sh = shingles.unionByName(shingles_state.read_all(sess))
         a = all_sh.select(
-            F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "h"
+            F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
         )
         b = all_sh.select(
-            F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"), "h"
+            F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"), "shingle"
         )
         common = (
             cands.join(a, "doc_a")
-            .join(b, ["doc_b", "h"])
+            .join(b, ["doc_b", "shingle"])
             .groupBy("doc_a", "doc_b", "na", "nb")
             .agg(F.count(F.lit(1)).alias("nc"))
         )
@@ -575,16 +503,12 @@ def _final_verdict(
     edges_path: str,
     bands_state,
     docs: DataFrame,
-    bucket_cap: int,
 ) -> DataFrame:
     """Post-drain reconciliation + clustering, shared by both harnesses:
     re-filter verified edges against the FINAL bucket census (the capped
     batch semantics), run CC, and emit the (doc_id, component_id, kept)
     verdict over ``docs`` (the corpus for the file harness; the consumed
     prefix for the rate harness)."""
-    _BUCKET_CAP = bucket_cap
-    from ntd_gtfs_to_socrata_spark.operators.graph import connected_components
-
     edges = _read_state(spark, edges_path, "doc_a long, doc_b long, epoch int")
     # Final bucket-cap reconciliation: a pair survives the CAPPED batch
     # semantics only if SOME band bucket of final size in [2, cap]
@@ -597,7 +521,7 @@ def _final_verdict(
     small = (
         all_bands.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= _BUCKET_CAP))
+        .filter((F.col("n") >= 2) & (F.col("n") <= LSH_BUCKET_CAP))
         .select("bucket")
     )
     members = all_bands.join(small, "bucket")
@@ -613,20 +537,7 @@ def _final_verdict(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    cc = connected_components(edges, src="doc_a", dst="doc_b").select(
-        F.col("node"), F.col("component_id").alias("comp")
-    )
-    comp = F.coalesce(F.col("comp"), F.col("doc_id"))
-    return (
-        docs.select("doc_id")
-        .join(cc, F.col("doc_id") == F.col("node"), "left")
-        .select(
-            "doc_id",
-            comp.alias("component_id"),
-            (comp == F.col("doc_id")).alias("kept"),
-        )
-    )
-
+    return keep_one(docs.select("doc_id"), edges, "doc_a", "doc_b")
 
 
 def incremental_lsh_dedup(
@@ -656,7 +567,7 @@ def incremental_lsh_dedup(
     )
     shingles_state = _CompactedState(
         os.path.join(work, "state_shingles"),
-        "doc_id long, n_sh int, h long, epoch int",
+        "doc_id long, n_sh int, shingle long, epoch int",
         ["doc_id"],
         f"stream_lsh_shingles_{run_id}",
         compact_every,
@@ -673,8 +584,6 @@ def incremental_lsh_dedup(
         wall={},  # coarse wall clock per harness stage
     )
     _w0 = _time.time()
-
-    _BUCKET_CAP = _bucket_cap()
 
     docs = load_table(spark, sf_dir, "documents")
     # ONE corpus pass stages all batches as contiguous doc_id ranges
@@ -694,9 +603,7 @@ def incremental_lsh_dedup(
         .parquet(staging)
     )
 
-    apply_batch = _make_apply_batch(
-        bands_state, shingles_state, edges_path, _BUCKET_CAP
-    )
+    apply_batch = _make_apply_batch(bands_state, shingles_state, edges_path)
 
     q = (
         stream.writeStream.foreachBatch(apply_batch)
@@ -708,7 +615,7 @@ def incremental_lsh_dedup(
     q.awaitTermination()
     LAST_RUN["wall"]["stream"] = round(_time.time() - _w0, 3)
 
-    return _final_verdict(spark, edges_path, bands_state, docs, _BUCKET_CAP)
+    return _final_verdict(spark, edges_path, bands_state, docs)
 
 
 # --- Unbounded-source variant: rate stream + planted exact duplicates ----
@@ -790,7 +697,7 @@ def rate_incremental_lsh_dedup(
     )
     shingles_state = _CompactedState(
         os.path.join(work, "state_shingles"),
-        "doc_id long, n_sh int, h long, epoch int",
+        "doc_id long, n_sh int, shingle long, epoch int",
         ["doc_id"],
         f"rate_lsh_shingles_{run_id}",
         compact_every,
@@ -806,8 +713,7 @@ def rate_incremental_lsh_dedup(
         consumed=0,
         counted_epochs=set(),
     )
-    cap = _bucket_cap()
-    inner = _make_apply_batch(bands_state, shingles_state, edges_path, cap)
+    inner = _make_apply_batch(bands_state, shingles_state, edges_path)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # one tiny count job per epoch: the drain check below needs a
@@ -871,4 +777,4 @@ def rate_incremental_lsh_dedup(
         .select("doc_id")
         .distinct()
     )
-    return _final_verdict(spark, edges_path, bands_state, consumed, cap)
+    return _final_verdict(spark, edges_path, bands_state, consumed)

@@ -389,3 +389,48 @@ def test_loops_share_one_exhaustion_path():
     raises, cadence = loop_bookkeeping(REPO_ROOT / "ntd_gtfs_to_socrata_spark")
     assert len(raises) == 1 and set(raises) <= lines_of(G._until_fixpoint), raises
     assert cadence and set(cadence) <= lines_of(G._rounds), cadence
+
+
+# A near-duplicate step written out in place: the i<j slice expansion of a
+# sorted list, the MinHash band key, or the MinHash signature aggregate.
+_NEARDUP_STEPS = (
+    r"\bslice\(.*\bi \+ 2\b",
+    r"mh\{2 \* i\}",
+    r"\bmin\(\s*(?:TX\.)?minhash_value\(",
+)
+# (path, line fragment) -> why the line is not a copy of a neardup step
+_NEARDUP_ALLOWED = {
+    ("queries/similarity_q.py", "i + 2, _NND_RING"): (
+        "NN-descent's linear-cost init pairs each id with the next "
+        "_NND_RING members of its bucket only, not with every later one"
+    ),
+}
+
+
+def neardup_steps(package: Path) -> list[str]:
+    """``path:line`` of every near-duplicate step written outside
+    ``operators/neardup.py`` and not in ``_NEARDUP_ALLOWED``."""
+    step = re.compile("|".join(_NEARDUP_STEPS))
+    hits = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        if rel == "operators/neardup.py":
+            continue
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if step.search(line) and not any(
+                rel == p and frag in line for p, frag in _NEARDUP_ALLOWED
+            ):
+                hits.append(f"{rel}:{n}")
+    return hits
+
+
+def test_neardup_steps_live_in_one_module():
+    """The i<j pair expansion, the LSH band key and the MinHash signature
+    aggregate are each written once, in ``operators/neardup.py``, so every
+    dedup query, the corpus release and the streaming dedup share one
+    definition (and the oracles one set of constants)."""
+    package = REPO_ROOT / "ntd_gtfs_to_socrata_spark"
+    assert neardup_steps(package) == []
+    owner = (package / "operators" / "neardup.py").read_text().splitlines()
+    for pattern in _NEARDUP_STEPS:
+        assert sum(bool(re.search(pattern, line)) for line in owner) == 1, pattern
