@@ -1,16 +1,24 @@
 """Multimodal column handling (north-star extension).
 
 Media (image/audio/video) are opaque ``binary`` columns plus typed
-metadata, the lakehouse-native layout for multimodal training data. The
-Spark-side plumbing — schemas, Arrow-batched ``mapInPandas`` UDFs, batch
-shapes — is real and tested. Codec status: BMP pixel decode, PNG pixel
-decode (stdlib zlib inflate + real scanline unfiltering), baseline JPEG
-decode (full entropy decode: canonical Huffman, byte unstuffing, RSTn,
-run-length AC, dezigzag, dequantize, float IDCT, YCbCr->RGB), NN resize,
-and PNG/JPEG/BMP header parsing are REAL implementations with no library
-dependency, as are WAV audio decode (RIFF chunk walk + signed PCM16 LE
-samples) and AVI frame sampling, and IMA-ADPCM compressed-audio decode
-(WAV format tag 0x11: block parse + 4-bit predictive nibble decode);
+metadata, the lakehouse-native layout for multimodal training data.
+Every decoder is one ``map_blobs(with_payload, schema, rows)`` call: the
+runner owns the Arrow-batched pandas pass (the doc_id/payload select,
+the batch loop, a NULL payload read as ``b""``, doc_id put in front of
+each row, the output column names taken from the DDL schema, and the
+failed-blob row ``(doc_id, NULL..., ok=false)``), and a decoder is only
+the ``rows(b) -> list[tuple]`` function of one blob's bytes. The RIFF
+parsers (WAV, IMA-ADPCM, mu-law, AVI) walk chunks through one walker,
+``_riff_chunks``, and the three WAVE codecs read fmt/fact/data through
+one ``_wave``.
+
+Codec status: BMP pixel decode, PNG pixel decode (stdlib zlib inflate +
+real scanline unfiltering), baseline JPEG decode (full entropy decode:
+canonical Huffman, byte unstuffing, RSTn, run-length AC, dezigzag,
+dequantize, float IDCT, YCbCr->RGB), GIF (LZW), NN resize, and
+PNG/JPEG/BMP header parsing are REAL implementations with no library
+dependency, as are WAV audio decode (signed PCM16 LE samples), G.711
+mu-law and IMA-ADPCM compressed-audio decode, and AVI frame sampling;
 only PERCEPTUAL codecs (MP3/AAC, H.264 etc.) remain STUBBED with a
 deterministic fake (this container has no codec libraries), clearly
 marked below, so swapping in ffmpeg is a one-function change.
@@ -22,12 +30,41 @@ column, processed by an adapter, never interpreted by the engine itself.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterator
 from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def map_blobs(
+    with_payload: DataFrame, schema: str, rows: Callable[[bytes], list | None]
+) -> DataFrame:
+    """Run ``rows`` over every blob in one Arrow-batched ``mapInPandas``
+    pass — each task decodes its partition's blobs in pandas batches, no
+    driver-side loop.
+
+    ``schema`` is the output's DDL string, doc_id first. ``rows(b)`` gets
+    one blob's bytes (a NULL payload arrives as ``b""``) and returns its
+    output rows without the doc_id, which the runner puts in front. A
+    summary decoder (schema ending in ``ok boolean``) returns None for a
+    blob it cannot decode, and the runner emits the failed-blob row
+    ``(doc_id, NULL..., False)`` — errors as data."""
+    columns = [field.split()[0] for field in schema.split(",")]
+    failed = [(None,) * (len(columns) - 2) + (False,)]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                got = rows(bytes(payload or b""))
+                out.extend((doc_id, *row) for row in (failed if got is None else got))
+            yield pd.DataFrame(out, columns=columns)
+
+    return with_payload.select("doc_id", "payload").mapInPandas(run, schema=schema)
+
 
 DECODE_SCHEMA = (
     "doc_id long, n_bytes long, format string, width long, height long, ok boolean"
@@ -48,7 +85,12 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def fake_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _stub_decode_rows(b: bytes) -> list:
+    n = len(b)
+    return [(n, "png" if n % 2 == 0 else "jpeg", n % 640 + 1, (n // 640) % 480 + 1, True)]
+
+
+def decode_media(with_payload: DataFrame) -> DataFrame:
     """STUB DECODER (deterministic fake).
 
     Real implementation would be e.g.::
@@ -59,29 +101,8 @@ def fake_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     The fake derives width/height from byte length so results are
     reproducible and oracle-checkable; everything around it (Arrow batch
     iteration, schema contract, per-partition execution) is the production
-    plumbing.
-    """
-    for pdf in batches:
-        n_bytes = pdf["payload"].map(len)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": n_bytes,
-                "format": n_bytes.map(lambda n: "png" if n % 2 == 0 else "jpeg"),
-                "width": n_bytes % 640 + 1,
-                "height": (n_bytes // 640) % 480 + 1,
-                "ok": True,
-            }
-        )
-
-
-def decode_media(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched decode over partitions — the pattern that scales:
-    each task decodes its partition's blobs in pandas batches, no
-    driver-side loop, no per-row Python overhead."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        fake_decode_batch, schema=DECODE_SCHEMA
-    )
+    plumbing."""
+    return map_blobs(with_payload, DECODE_SCHEMA, _stub_decode_rows)
 
 
 AUDIO_WINDOW_SCHEMA = (
@@ -91,86 +112,65 @@ AUDIO_WINDOW_SCHEMA = (
 _AUDIO_WIN = 100  # samples per analysis window
 
 
-def audio_window_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """STUB AUDIO DECODER + real windowed feature extraction.
+def _audio_window_rows(b: bytes) -> list:
+    import numpy as np
+
+    samples = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
+    starts = range(0, max(len(samples), 1), _AUDIO_WIN)
+    wins = (samples[w : w + _AUDIO_WIN] for w in starts)
+    # samples are unsigned, so max(initial=0) is 0 only for an empty blob's window
+    return [
+        (i, len(win), int((win * win).sum()), int(win.max(initial=0)))
+        for i, win in enumerate(wins)
+    ]
+
+
+def audio_window_stats(with_payload: DataFrame) -> DataFrame:
+    """STUB AUDIO DECODER + real windowed feature extraction: one output
+    row per 100-sample analysis window per blob (an empty blob has one
+    empty window).
 
     A real implementation decodes the container first (e.g.
     ``soundfile.read(io.BytesIO(payload))`` — not available in this
     container); the stub treats the payload bytes AS the 8-bit PCM
     samples. Everything downstream — numpy-vectorized per-window
-    sum-of-squares / peak over Arrow batches — is the production shape
-    for distributed audio feature extraction (RMS/VAD/loudness). Outputs
-    are integers, so results are bit-exact across engines and batch
-    orders."""
-    import numpy as np
-
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in ("doc_id", "window_no", "n_samples", "sum_sq", "peak")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            samples = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-            for w in range(0, max(len(samples), 1), _AUDIO_WIN):
-                win = samples[w : w + _AUDIO_WIN]
-                out["doc_id"].append(doc_id)
-                out["window_no"].append(w // _AUDIO_WIN)
-                out["n_samples"].append(len(win))
-                out["sum_sq"].append(int((win * win).sum()))
-                out["peak"].append(int(win.max()) if len(win) else 0)
-        yield pd.DataFrame(out)
-
-
-def audio_window_stats(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched windowed audio features (stub codec, real plumbing):
-    one output row per 100-sample analysis window per blob."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        audio_window_batch, schema=AUDIO_WINDOW_SCHEMA
-    )
+    sum-of-squares / peak — is the production shape for distributed
+    audio feature extraction (RMS/VAD/loudness). Outputs are integers,
+    so results are bit-exact across engines and batch orders."""
+    return map_blobs(with_payload, AUDIO_WINDOW_SCHEMA, _audio_window_rows)
 
 
 PHASH_SCHEMA = "doc_id long, b0 int, b1 int, b2 int, b3 int"
 
 
-def phash_band_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """STUB PERCEPTUAL HASH (blockhash shape) + real Arrow plumbing.
+def _phash_rows(b: bytes) -> list:
+    import numpy as np
 
-    A real pipeline computes pHash/blockhash on the DECODED grayscale
-    image (e.g. ``imagehash.phash(Image.open(...))`` — codec unavailable
-    here); the stub runs the actual blockhash algorithm on the payload
-    BYTES: split the byte stream into 64 equal blocks, bit_i = 1 iff
+    arr = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
+    n = len(arr)
+    if not n:
+        return [(0, 0, 0, 0)]
+    cs = np.concatenate(([0], np.cumsum(arr)))
+    lo = (np.arange(64) * n) // 64
+    hi = ((np.arange(64) + 1) * n) // 64
+    bits = (64 * (cs[hi] - cs[lo])) > int(cs[-1])
+    return [tuple(sum(int(bits[16 * j + k]) << k for k in range(16)) for j in range(4))]
+
+
+def phash_bands(with_payload: DataFrame) -> DataFrame:
+    """Per-blob 64-bit perceptual hash as four 16-bit bands.
+
+    STUB PERCEPTUAL HASH (blockhash shape): a real pipeline computes
+    pHash/blockhash on the DECODED grayscale image (e.g.
+    ``imagehash.phash(Image.open(...))`` — codec unavailable here); the
+    stub runs the actual blockhash algorithm on the payload BYTES: split
+    the byte stream into 64 equal blocks, bit_i = 1 iff
     64·sum(block_i) > sum(all bytes) (integer-exact mean comparison).
     The 64 bits are returned as four 16-bit band values — the banding
     layout the Hamming-LSH bucket join consumes — so no 2^63 overflow
     ambiguity across engines. Block sums come from one cumulative sum
     (correct for empty blocks when n < 64, unlike reduceat)."""
-    import numpy as np
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "b0", "b1", "b2", "b3")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-            n = len(arr)
-            bands = [0, 0, 0, 0]
-            if n:
-                cs = np.concatenate(([0], np.cumsum(arr)))
-                total = int(cs[-1])
-                lo = (np.arange(64) * n) // 64
-                hi = ((np.arange(64) + 1) * n) // 64
-                bits = (64 * (cs[hi] - cs[lo])) > total
-                for j in range(4):
-                    band = 0
-                    for k in range(16):
-                        band |= int(bits[16 * j + k]) << k
-                    bands[j] = band
-            out["doc_id"].append(doc_id)
-            for j in range(4):
-                out[f"b{j}"].append(bands[j])
-        yield pd.DataFrame(out)
-
-
-def phash_bands(with_payload: DataFrame) -> DataFrame:
-    """Per-blob 64-bit perceptual hash as four 16-bit bands, Arrow-batched."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        phash_band_batch, schema=PHASH_SCHEMA
-    )
+    return map_blobs(with_payload, PHASH_SCHEMA, _phash_rows)
 
 
 FRAME_INTENSITY_SCHEMA = "doc_id long, frame_no int, intensity long"
@@ -178,31 +178,23 @@ FRAME_INTENSITY_SCHEMA = "doc_id long, frame_no int, intensity long"
 _FRAME_BYTES = 100  # bytes per (stub) frame
 
 
-def frame_intensity_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """STUB FRAME DECODER + real per-frame reduction: a real pipeline
-    decodes frames and takes mean luma; the stub reads each 100-byte
-    payload slice as the frame and sums its bytes (integer => bit-exact
-    across engines). Same cumulative-sum slicing as ``phash_band_batch``."""
+def _frame_intensity_rows(b: bytes) -> list:
     import numpy as np
 
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "frame_no", "intensity")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-            # empty payload => zero frames, matching the oracle's
-            # ceil(len/100) frame count (0 when len = 0) — see ADVICE r6
-            for i in range(0, len(arr), _FRAME_BYTES):
-                out["doc_id"].append(doc_id)
-                out["frame_no"].append(i // _FRAME_BYTES)
-                out["intensity"].append(int(arr[i : i + _FRAME_BYTES].sum()))
-        yield pd.DataFrame(out)
+    arr = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
+    return [
+        (i // _FRAME_BYTES, int(arr[i : i + _FRAME_BYTES].sum()))
+        for i in range(0, len(arr), _FRAME_BYTES)
+    ]
 
 
 def frame_intensities(with_payload: DataFrame) -> DataFrame:
-    """Per-frame intensity rows, Arrow-batched."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        frame_intensity_batch, schema=FRAME_INTENSITY_SCHEMA
-    )
+    """Per-frame intensity rows. STUB FRAME DECODER + real per-frame
+    reduction: a real pipeline decodes frames and takes mean luma; the
+    stub reads each 100-byte payload slice as the frame and sums its
+    bytes (integer => bit-exact across engines). An empty payload has
+    zero frames, matching the oracle's ceil(len/100) frame count."""
+    return map_blobs(with_payload, FRAME_INTENSITY_SCHEMA, _frame_intensity_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -296,8 +288,6 @@ def parse_header(b) -> tuple:
     segments by their length fields) to the first SOF0-SOF3 frame
     header. Truncated or malformed containers return ok=False — errors
     as data, the S4 discipline."""
-    import struct
-
     b = bytes(b or b"")
     if b[:8] == PNG_SIG:
         if len(b) < 26 or b[12:16] != b"IHDR":
@@ -338,38 +328,16 @@ def parse_header(b) -> tuple:
     return ("unknown", None, None, None, None, False)
 
 
-def parse_header_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched header parse — REAL parsing of real container bytes
-    (pure Python, no codec library); contrast with fake_decode_batch,
-    which stubs pixel decode."""
-    for pdf in batches:
-        parsed = [parse_header(p) for p in pdf["payload"]]
-        out = pd.DataFrame(
-            parsed,
-            columns=["format", "width", "height", "bit_depth", "channels", "ok"],
-        )
-        out.insert(0, "doc_id", pdf["doc_id"].values)
-        out["n_bytes"] = pdf["payload"].map(len).values
-        yield out[
-            [
-                "doc_id",
-                "format",
-                "width",
-                "height",
-                "bit_depth",
-                "channels",
-                "n_bytes",
-                "ok",
-            ]
-        ]
+def _header_rows(b: bytes) -> list:
+    *fields, ok = parse_header(b)
+    return [(*fields, len(b), ok)]
 
 
 def parse_image_headers(with_payload: DataFrame) -> DataFrame:
-    """Header metadata for every blob via mapInPandas — the ingest-time
-    scan that catalogs a media lake without decoding a single pixel."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        parse_header_batch, schema=HEADER_SCHEMA
-    )
+    """Header metadata for every blob — REAL parsing of real container
+    bytes (pure Python, no codec library): the ingest-time scan that
+    catalogs a media lake without decoding a single pixel."""
+    return map_blobs(with_payload, HEADER_SCHEMA, _header_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -453,8 +421,6 @@ def make_bmp_payload(docs: DataFrame) -> DataFrame:
 def _parse_bmp(b: bytes):
     """Parse a 24-bpp uncompressed BMP; returns (w, h, pixel ndarray of
     shape (h, w, 3) in image order / BGR channels) or None if malformed."""
-    import struct
-
     import numpy as np
 
     if len(b) < 54 or b[:2] != BMP_MAGIC:
@@ -477,68 +443,46 @@ def _parse_bmp(b: bytes):
     return w, h, rows.astype(np.int64)
 
 
-def bmp_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL PIXEL DECODE (no stub, no codec): per blob, parse the BMP
-    headers, slice the padded BGR rows, and reduce to integer per-channel
-    sums — exact on any engine. Malformed payloads return ok=False with
-    null stats (errors as data, the S4 discipline)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_bmp(bytes(payload or b""))
-            if parsed is None:
-                out.append((doc_id, None, None, None, None, None, False))
-                continue
-            w, h, img = parsed
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    int(img[..., 2].sum()),  # BMP stores BGR: R is byte 2
-                    int(img[..., 1].sum()),
-                    int(img[..., 0].sum()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b", "ok"],
-        )
+def _channel_sums(img, bgr: bool) -> tuple:
+    """Exact integer (sum_r, sum_g, sum_b) of an (h, w, 3) pixel array
+    stored in BGR (BMP, AVI DIB frames) or RGB (PNG, GIF) channel order."""
+    return tuple(int(img[..., c].sum()) for c in ((2, 1, 0) if bgr else (0, 1, 2)))
+
+
+def _image_stats(parsed, bgr: bool) -> list | None:
+    """The (width, height, sum_r, sum_g, sum_b, ok) row of a parsed
+    ``(w, h, pixels)`` image, or None (the failed-blob row) when the
+    blob did not parse."""
+    if parsed is None:
+        return None
+    w, h, img = parsed
+    return [(w, h, *_channel_sums(img, bgr), True)]
 
 
 def decode_bmp(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched real BMP pixel decode: dims + exact channel sums."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        bmp_decode_batch, schema=BMP_DECODE_SCHEMA
+    """REAL PIXEL DECODE (no stub, no codec): per blob, parse the BMP
+    headers, slice the padded BGR rows, and reduce to dims + exact
+    integer per-channel sums. Malformed payloads return ok=False with
+    null stats (errors as data, the S4 discipline)."""
+    return map_blobs(
+        with_payload, BMP_DECODE_SCHEMA, lambda b: _image_stats(_parse_bmp(b), bgr=True)
     )
 
 
-def bmp_row_intensity_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Per-IMAGE-row pixel intensity (sum of the row's BGR bytes) from
-    real decoded pixels — row y=0 is the TOP image row, so the bottom-up
-    file layout is genuinely exercised (a decoder that forgets the flip
-    hash-mismatches the oracle)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_bmp(bytes(payload or b""))
-            if parsed is None:
-                continue
-            _, h, img = parsed
-            row_sums = img.sum(axis=(1, 2))
-            out.extend((doc_id, y, int(row_sums[y])) for y in range(h))
-        yield pd.DataFrame(out, columns=["doc_id", "y", "intensity"])
+def _bmp_row_rows(b: bytes) -> list:
+    parsed = _parse_bmp(b)
+    if parsed is None:
+        return []
+    return [(y, int(s)) for y, s in enumerate(parsed[2].sum(axis=(1, 2)))]
 
 
 def bmp_row_intensities(with_payload: DataFrame) -> DataFrame:
-    """One row per image row per blob, Arrow-batched — the fan-out stage
-    scene-cut detection consumes."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        bmp_row_intensity_batch, schema=BMP_ROW_SCHEMA
-    )
+    """One row per image row per blob — the fan-out stage scene-cut
+    detection consumes: the row's BGR byte sum from real decoded pixels.
+    Row y=0 is the TOP image row, so the bottom-up file layout is
+    genuinely exercised (a decoder that forgets the flip hash-mismatches
+    the oracle)."""
+    return map_blobs(with_payload, BMP_ROW_SCHEMA, _bmp_row_rows)
 
 
 # Fixed thumbnail geometry: sources span 1..8 x 1..6, so 4x3 exercises
@@ -548,41 +492,37 @@ RESIZE_H = 3
 BMP_RESIZE_SCHEMA = "doc_id long, x long, y long, r long, g long, b long"
 
 
-def bmp_resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL nearest-neighbor resize over real decoded pixels: each output
-    cell (x, y) of the fixed RESIZE_W x RESIZE_H thumbnail reads source
-    pixel (floor(x*w/W), floor(y*h/H)) in image order — the standard NN
-    sampler (what PIL's Image.NEAREST computes, minus its +0.5 center
-    offset; the floor convention is pinned so the oracle can replay it).
-    Channels come back RGB from the BMP's BGR bytes. Malformed payloads
-    yield no rows (errors-as-data handled upstream by decode_bmp)."""
+def _nn_cells(img, w: int, h: int) -> list:
+    """The fixed RESIZE_W x RESIZE_H nearest-neighbour thumbnail of an
+    image-order (h, w, ...) array as row-major (x, y, pixel) cells: cell
+    (x, y) reads source pixel (floor(x*w/W), floor(y*h/H)) — the
+    standard NN sampler (what PIL's Image.NEAREST computes, minus its
+    +0.5 center offset; the floor convention is pinned so the oracle can
+    replay it)."""
     import numpy as np
 
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_bmp(bytes(payload or b""))
-            if parsed is None:
-                continue
-            w, h, img = parsed
-            xs = (np.arange(RESIZE_W) * w) // RESIZE_W
-            ys = (np.arange(RESIZE_H) * h) // RESIZE_H
-            small = img[np.ix_(ys, xs)]  # (H, W, 3) BGR, image order
-            for y in range(RESIZE_H):
-                for x in range(RESIZE_W):
-                    bb, gg, rr = small[y, x]
-                    out.append((doc_id, x, y, int(rr), int(gg), int(bb)))
-        yield pd.DataFrame(out, columns=["doc_id", "x", "y", "r", "g", "b"])
+    xs = (np.arange(RESIZE_W) * w) // RESIZE_W
+    ys = (np.arange(RESIZE_H) * h) // RESIZE_H
+    small = img[np.ix_(ys, xs)]
+    return [(x, y, small[y, x]) for y in range(RESIZE_H) for x in range(RESIZE_W)]
+
+
+def _bmp_resize_rows(b: bytes) -> list:
+    parsed = _parse_bmp(b)
+    if parsed is None:
+        return []
+    w, h, img = parsed
+    return [(x, y, int(p[2]), int(p[1]), int(p[0])) for x, y, p in _nn_cells(img, w, h)]
 
 
 def resize_bmp(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched thumbnail resize: one row per output pixel per blob
-    (W*H rows/image, bounded — the fan-out a vision-encoder preprocessor
-    feeds). Decode + resample stay in one UDF pass so pixels never cross
-    the wire at native resolution."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        bmp_resize_batch, schema=BMP_RESIZE_SCHEMA
-    )
+    """REAL nearest-neighbour thumbnail resize over real decoded pixels:
+    one row per output pixel per blob (W*H rows/image, bounded — the
+    fan-out a vision-encoder preprocessor feeds), channels back in RGB
+    from the BMP's BGR bytes. Decode + resample stay in one UDF pass so
+    pixels never cross the wire at native resolution. Malformed payloads
+    yield no rows (errors-as-data handled upstream by decode_bmp)."""
+    return map_blobs(with_payload, BMP_RESIZE_SCHEMA, _bmp_resize_rows)
 
 
 # --- REAL compressed-format decode: PNG (stored-deflate construction,
@@ -737,7 +677,7 @@ def _parse_png(b: bytes):
         return None
     pos, w, h, idat = 8, None, None, b""
     while pos + 12 <= len(b):
-        (length,) = __import__("struct").unpack_from(">I", b, pos)
+        (length,) = struct.unpack_from(">I", b, pos)
         # Declared chunk length is attacker-controlled: a length that runs
         # past the buffer must be errors-as-data (return None -> ok=False),
         # never a struct.error that kills the whole Spark task.
@@ -745,13 +685,13 @@ def _parse_png(b: bytes):
             return None
         ctype = b[pos + 4 : pos + 8]
         data = b[pos + 8 : pos + 8 + length]
-        (crc,) = __import__("struct").unpack_from(">I", b, pos + 8 + length)
+        (crc,) = struct.unpack_from(">I", b, pos + 8 + length)
         if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
             return None
         if ctype == b"IHDR":
             if length != 13:
                 return None
-            w, h = __import__("struct").unpack_from(">II", data, 0)
+            w, h = struct.unpack_from(">II", data, 0)
             depth, color, comp, filt, inter = data[8:13]
             if depth != 8 or color != 2 or comp != 0 or filt != 0 or inter != 0:
                 return None
@@ -784,40 +724,13 @@ def _parse_png(b: bytes):
     return w, h, px
 
 
-def png_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL COMPRESSED-FORMAT PIXEL DECODE: chunk walk with CRC checks,
-    stdlib zlib inflate, real scanline unfiltering — reduced to exact
-    integer per-channel sums. Malformed payloads return ok=False with
-    null stats (errors as data, the S4 discipline)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_png(bytes(payload or b""))
-            if parsed is None:
-                out.append((doc_id, None, None, None, None, None, False))
-                continue
-            w, h, img = parsed
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    int(img[..., 0].sum()),  # PNG is RGB order
-                    int(img[..., 1].sum()),
-                    int(img[..., 2].sum()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b", "ok"],
-        )
-
-
 def decode_png(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched real PNG decode: dims + exact channel sums."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        png_decode_batch, schema=PNG_DECODE_SCHEMA
+    """REAL COMPRESSED-FORMAT PIXEL DECODE: chunk walk with CRC checks,
+    stdlib zlib inflate, real scanline unfiltering — reduced to dims +
+    exact integer per-channel sums. Malformed payloads return ok=False
+    with null stats (errors as data, the S4 discipline)."""
+    return map_blobs(
+        with_payload, PNG_DECODE_SCHEMA, lambda b: _image_stats(_parse_png(b), bgr=False)
     )
 
 
@@ -874,83 +787,88 @@ def make_wav_payload(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", payload.alias("payload"))
 
 
-def _parse_wav(b: bytes):
-    """Real RIFF/WAVE parse: chunk walk (word-aligned, unknown chunks
-    skipped), PCM16-mono fmt validation, signed little-endian sample
-    decode. Returns an int64 ndarray of samples or None."""
-    import struct
+def _riff_chunks(buf: bytes, start: int) -> list | None:
+    """The ``(fourcc, body)`` chunks of the RIFF chunk list that starts
+    at ``buf[start]``, in file order, unknown ones included for the
+    caller to skip. Chunks are word-aligned: an odd-length body is
+    followed by a pad byte. Declared lengths are untrusted, so a chunk
+    whose length runs past the buffer makes the whole list None —
+    errors as data, never a half-read body."""
+    chunks, pos = [], start
+    while pos + 8 <= len(buf):
+        (length,) = struct.unpack_from("<I", buf, pos + 4)
+        if pos + 8 + length > len(buf):
+            return None
+        chunks.append((buf[pos : pos + 4], buf[pos + 8 : pos + 8 + length]))
+        pos += 8 + length + (length & 1)
+    return chunks
 
+
+def _riff(b: bytes, form: bytes) -> list | None:
+    """Top-level chunks of a RIFF file of type ``form`` (``b"WAVE"``,
+    ``b"AVI "``), or None when the header is wrong, the declared RIFF
+    size runs past the buffer, or a chunk is truncated."""
+    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != form:
+        return None
+    if struct.unpack_from("<I", b, 4)[0] + 8 > len(b):
+        return None
+    return _riff_chunks(b, 12)
+
+
+def _wave(b: bytes):
+    """The RIFF/WAVE read the PCM, IMA-ADPCM and mu-law parsers share:
+    ``(fmt fields, fmt body, fact count, data bytes)`` where the fields
+    are ``(tag, channels, rate, byte_rate, block_align, bits)`` and the
+    fact count is None without a fact chunk. None when the container is
+    malformed or lacks a fmt chunk of at least 16 bytes or a data
+    chunk, or has a fact chunk under 4 bytes. A repeated chunk's last
+    copy wins; each codec validates the fmt fields itself."""
+    chunks = _riff(b, b"WAVE")
+    if chunks is None:
+        return None
+    found = dict(chunks)
+    fmt, fact, data = found.get(b"fmt "), found.get(b"fact"), found.get(b"data")
+    if fmt is None or len(fmt) < 16 or data is None:
+        return None
+    if fact is not None and len(fact) < 4:
+        return None
+    fact_n = None if fact is None else struct.unpack_from("<I", fact)[0]
+    return struct.unpack_from("<HHIIHH", fmt), fmt, fact_n, data
+
+
+def _parse_wav(b: bytes):
+    """Real RIFF/WAVE parse: PCM16-mono fmt validation and signed
+    little-endian sample decode. Returns an int64 ndarray of samples or
+    None."""
     import numpy as np
 
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+    wave = _wave(b)
+    if wave is None:
         return None
-    (riff_size,) = struct.unpack_from("<I", b, 4)
-    if riff_size + 8 > len(b):
-        return None
-    pos, fmt_ok, data = 12, False, None
-    while pos + 8 <= len(b):
-        ctype = b[pos : pos + 4]
-        (length,) = struct.unpack_from("<I", b, pos + 4)
-        body = b[pos + 8 : pos + 8 + length]
-        if ctype == b"fmt ":
-            if length < 16:
-                return None
-            audio_fmt, channels, _, _, block, bits = struct.unpack_from(
-                "<HHIIHH", body, 0
-            )
-            if audio_fmt != 1 or channels != 1 or bits != 16 or block != 2:
-                return None
-            fmt_ok = True
-        elif ctype == b"data":
-            data = body
-        pos += 8 + length + (length & 1)  # RIFF chunks are word-aligned
-    if not fmt_ok or data is None or len(data) % 2:
+    (audio_fmt, channels, _, _, block, bits), _, _, data = wave
+    if audio_fmt != 1 or channels != 1 or bits != 16 or block != 2 or len(data) % 2:
         return None
     return np.frombuffer(data, dtype="<i2").astype(np.int64)
 
 
-def wav_window_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL AUDIO DECODE + windowed feature extraction: RIFF chunk walk,
-    PCM16 LE sample decode, then per-window sum-of-squares / peak /
-    trough — the RMS/VAD/loudness reduction, in exact integers.
-    Malformed payloads yield no rows."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            samples = _parse_wav(bytes(payload or b""))
-            if samples is None:
-                continue
-            for w in range(0, len(samples), WAV_WIN):
-                win = samples[w : w + WAV_WIN]
-                out.append(
-                    (
-                        doc_id,
-                        w // WAV_WIN,
-                        len(win),
-                        int((win * win).sum()),
-                        int(win.max()),
-                        int(win.min()),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id",
-                "window_no",
-                "n_samples",
-                "sum_sq",
-                "peak",
-                "trough",
-            ],
-        )
+def _wav_window_rows(b: bytes) -> list:
+    samples = _parse_wav(b)
+    if samples is None:
+        return []
+    wins = (samples[w : w + WAV_WIN] for w in range(0, len(samples), WAV_WIN))
+    return [
+        (i, len(win), int((win * win).sum()), int(win.max()), int(win.min()))
+        for i, win in enumerate(wins)
+    ]
 
 
 def wav_window_stats(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched real WAV decode: one row per 64-sample analysis
-    window per blob, exact integer features."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        wav_window_batch, schema=WAV_WINDOW_SCHEMA
-    )
+    """REAL AUDIO DECODE + windowed feature extraction: RIFF chunk walk,
+    PCM16 LE sample decode, then one row per 64-sample analysis window
+    per blob with its sum-of-squares / peak / trough — the
+    RMS/VAD/loudness reduction, in exact integers. Malformed payloads
+    yield no rows."""
+    return map_blobs(with_payload, WAV_WINDOW_SCHEMA, _wav_window_rows)
 
 
 # --- REAL compressed-audio decode: IMA-ADPCM (WAV format tag 0x11) -------
@@ -960,7 +878,7 @@ def wav_window_stats(with_payload: DataFrame) -> DataFrame:
 # codec with a closed-form integer decoder (step/index tables are public
 # in the IMA "Recommended Practices for Enhancing Digital Audio
 # Compatibility" spec and multiple RFCs). Only perceptual codecs
-# (MP3/AAC, H.264) remain behind fake_decode_batch.
+# (MP3/AAC, H.264) remain behind decode_media's stub.
 #
 # Exact-oracle construction (the JPEG/WAV trick adapted to a recurrence):
 # the step-INDEX trajectory depends only on the nibble stream, never on
@@ -1049,47 +967,18 @@ def _parse_adpcm_wav(b: bytes):
     entropy decode with the IMA step/index tables and both clamps, fact
     chunk sample-count truncation. Returns an int64 ndarray of samples
     or None on ANY malformed input (errors as data)."""
-    import struct
-
     import numpy as np
 
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+    wave = _wave(b)
+    if wave is None:
         return None
-    (riff_size,) = struct.unpack_from("<I", b, 4)
-    if riff_size + 8 > len(b):
+    (tag, channels, _, _, block, bits), fmt, fact_n, data = wave
+    if tag != 0x11 or channels != 1 or bits != 4 or block < 5:
         return None
-    pos, fmt_info, data, fact_n = 12, None, None, None
-    while pos + 8 <= len(b):
-        ctype = b[pos : pos + 4]
-        (length,) = struct.unpack_from("<I", b, pos + 4)
-        if pos + 8 + length > len(b):
-            return None
-        body = b[pos + 8 : pos + 8 + length]
-        if ctype == b"fmt ":
-            if length < 16:
-                return None
-            tag, channels, _, _, block, bits = struct.unpack_from(
-                "<HHIIHH", body, 0
-            )
-            if tag != 0x11 or channels != 1 or bits != 4 or block < 5:
-                return None
-            if length >= 20:
-                (spb,) = struct.unpack_from("<H", body, 18)
-            else:
-                spb = (block - 4) * 2 + 1
-            if spb < 1 or spb > (block - 4) * 2 + 1:
-                return None
-            fmt_info = (block, spb)
-        elif ctype == b"fact":
-            if length < 4:
-                return None
-            (fact_n,) = struct.unpack_from("<I", body, 0)
-        elif ctype == b"data":
-            data = body
-        pos += 8 + length + (length & 1)
-    if fmt_info is None or data is None:
+    max_spb = (block - 4) * 2 + 1
+    spb = struct.unpack_from("<H", fmt, 18)[0] if len(fmt) >= 20 else max_spb
+    if spb < 1 or spb > max_spb:
         return None
-    block, spb = fmt_info
     if len(data) == 0 or len(data) % block:
         return None
     step_t, idx_t = ADPCM_STEP_TABLE, ADPCM_INDEX_TABLE
@@ -1129,45 +1018,23 @@ def _parse_adpcm_wav(b: bytes):
     return np.asarray(out, dtype=np.int64)
 
 
-def adpcm_stats_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _sample_stats(s) -> list | None:
+    """The (n_samples, sum_s, last_s, peak, trough, ok) row of a decoded
+    sample array, or None (the failed-blob row) when it did not decode
+    or decoded to no samples."""
+    if s is None or not s.size:
+        return None
+    return [(int(s.size), int(s.sum()), int(s[-1]), int(s.max()), int(s.min()), True)]
+
+
+def decode_adpcm(with_payload: DataFrame) -> DataFrame:
     """REAL COMPRESSED-AUDIO DECODE: full IMA-ADPCM nibble decode per
     blob, reduced to exact integer stats (count / sum / last / peak /
     trough) — the loudness-and-clipping screen over a compressed audio
     lake. Malformed payloads return ok=False with null stats (errors as
     data)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            s = _parse_adpcm_wav(bytes(payload or b""))
-            if s is None or not s.size:
-                out.append((doc_id, None, None, None, None, None, False))
-                continue
-            out.append(
-                (
-                    doc_id,
-                    int(s.size),
-                    int(s.sum()),
-                    int(s[-1]),
-                    int(s.max()),
-                    int(s.min()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "n_samples", "sum_s", "last_s", "peak", "trough",
-                "ok",
-            ],
-        )
-
-
-def decode_adpcm(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched IMA-ADPCM decode: per-blob exact integer stats."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        adpcm_stats_batch, schema=ADPCM_DECODE_SCHEMA
+    return map_blobs(
+        with_payload, ADPCM_DECODE_SCHEMA, lambda b: _sample_stats(_parse_adpcm_wav(b))
     )
 
 
@@ -1245,39 +1112,13 @@ def _parse_mulaw_wav(b: bytes):
     tag-7 validation (mono, 8-bit, block align 1), fact-chunk sample
     truncation, per-byte mu-law expansion. Returns an int64 ndarray of
     samples or None on ANY malformed input (errors as data)."""
-    import struct
-
     import numpy as np
 
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+    wave = _wave(b)
+    if wave is None:
         return None
-    (riff_size,) = struct.unpack_from("<I", b, 4)
-    if riff_size + 8 > len(b):
-        return None
-    pos, fmt_ok, data, fact_n = 12, False, None, None
-    while pos + 8 <= len(b):
-        ctype = b[pos : pos + 4]
-        (length,) = struct.unpack_from("<I", b, pos + 4)
-        if pos + 8 + length > len(b):
-            return None
-        body = b[pos + 8 : pos + 8 + length]
-        if ctype == b"fmt ":
-            if length < 16:
-                return None
-            tag, channels, _, _, block, bits = struct.unpack_from(
-                "<HHIIHH", body, 0
-            )
-            if tag != 7 or channels != 1 or bits != 8 or block != 1:
-                return None
-            fmt_ok = True
-        elif ctype == b"fact":
-            if length < 4:
-                return None
-            (fact_n,) = struct.unpack_from("<I", body, 0)
-        elif ctype == b"data":
-            data = body
-        pos += 8 + length + (length & 1)
-    if not fmt_ok or data is None or len(data) == 0:
+    (tag, channels, _, _, block, bits), _, fact_n, data = wave
+    if tag != 7 or channels != 1 or bits != 8 or block != 1 or len(data) == 0:
         return None
     samples = _mulaw_expand(np.frombuffer(data, dtype=np.uint8))
     if fact_n is not None:
@@ -1287,43 +1128,12 @@ def _parse_mulaw_wav(b: bytes):
     return samples
 
 
-def mulaw_stats_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def decode_mulaw(with_payload: DataFrame) -> DataFrame:
     """REAL COMPANDED-AUDIO DECODE: per-blob mu-law expansion reduced to
     exact integer stats (count / sum / last / peak / trough). Malformed
     payloads return ok=False with null stats (errors as data)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            s = _parse_mulaw_wav(bytes(payload or b""))
-            if s is None or not s.size:
-                out.append((doc_id, None, None, None, None, None, False))
-                continue
-            out.append(
-                (
-                    doc_id,
-                    int(s.size),
-                    int(s.sum()),
-                    int(s[-1]),
-                    int(s.max()),
-                    int(s.min()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "n_samples", "sum_s", "last_s", "peak", "trough",
-                "ok",
-            ],
-        )
-
-
-def decode_mulaw(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched G.711 mu-law decode: per-blob exact integer stats."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        mulaw_stats_batch, schema=MULAW_DECODE_SCHEMA
+    return map_blobs(
+        with_payload, MULAW_DECODE_SCHEMA, lambda b: _sample_stats(_parse_mulaw_wav(b))
     )
 
 
@@ -1421,57 +1231,40 @@ def _parse_avi(b: bytes):
     stream, 24-bpp uncompressed strf), then per-frame DIB decode from
     the movi LIST. Returns (w, h, [frame ndarray (h, w, 3) BGR in image
     order, ...]) or None."""
-    import struct
-
     import numpy as np
 
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
+    chunks = _riff(b, b"AVI ")
+    if chunks is None:
         return None
-    (riff_size,) = struct.unpack_from("<I", b, 4)
-    if riff_size + 8 > len(b):
-        return None
-    pos, w, h, n_f, frames = 12, None, None, None, []
-    while pos + 8 <= len(b):
-        ctype = b[pos : pos + 4]
-        (length,) = struct.unpack_from("<I", b, pos + 4)
-        body = b[pos + 8 : pos + 8 + length]
-        if ctype == b"LIST" and body[:4] == b"hdrl":
-            # avih dims + frame count, then strl/strh/strf validation
-            p = 4
-            while p + 8 <= len(body):
-                sub = body[p : p + 4]
-                (slen,) = struct.unpack_from("<I", body, p + 4)
-                sdata = body[p + 8 : p + 8 + slen]
-                # Declared sub-chunk length past the buffer is malformed
-                # input: errors-as-data, never a struct.error on unpack.
-                if len(sdata) < slen:
+    w, h, n_f, frames = None, None, None, []
+    for ctype, body in chunks:
+        kind = body[:4] if ctype == b"LIST" else None
+        if kind not in (b"hdrl", b"movi"):
+            continue
+        subs = _riff_chunks(body, 4)
+        if subs is None:
+            return None
+        if kind == b"movi":
+            frames += [fb for fcc, fb in subs if fcc in (b"00db", b"00dc")]
+            continue
+        # avih dims + frame count, then strl/strh/strf validation
+        for sub, sdata in subs:
+            if sub == b"avih":
+                if len(sdata) < 56:
                     return None
-                if sub == b"avih":
-                    if slen < 56:
-                        return None
-                    n_f = struct.unpack_from("<I", sdata, 16)[0]
-                    w, h = struct.unpack_from("<II", sdata, 32)
-                elif sub == b"LIST" and sdata[:4] == b"strl":
-                    if sdata[4:8] != b"strh" or sdata[12:20] != b"vidsDIB ":
-                        return None
-                    q = sdata.find(b"strf")
-                    if q < 0 or len(sdata) < q + 8 + 20:
-                        return None
-                    bi = sdata[q + 8 :]
-                    planes, bpp = struct.unpack_from("<HH", bi, 12)
-                    (comp,) = struct.unpack_from("<I", bi, 16)
-                    if planes != 1 or bpp != 24 or comp != 0:
-                        return None
-                p += 8 + slen + (slen & 1)
-        elif ctype == b"LIST" and body[:4] == b"movi":
-            p = 4
-            while p + 8 <= len(body):
-                fcc = body[p : p + 4]
-                (flen,) = struct.unpack_from("<I", body, p + 4)
-                if fcc in (b"00db", b"00dc"):
-                    frames.append(body[p + 8 : p + 8 + flen])
-                p += 8 + flen + (flen & 1)
-        pos += 8 + length + (length & 1)
+                n_f = struct.unpack_from("<I", sdata, 16)[0]
+                w, h = struct.unpack_from("<II", sdata, 32)
+            elif sub == b"LIST" and sdata[:4] == b"strl":
+                if sdata[4:8] != b"strh" or sdata[12:20] != b"vidsDIB ":
+                    return None
+                q = sdata.find(b"strf")
+                if q < 0 or len(sdata) < q + 8 + 20:
+                    return None
+                bi = sdata[q + 8 :]
+                planes, bpp = struct.unpack_from("<HH", bi, 12)
+                (comp,) = struct.unpack_from("<I", bi, 16)
+                if planes != 1 or bpp != 24 or comp != 0:
+                    return None
     if not w or not h or n_f is None or len(frames) != n_f:
         return None
     stride = ((w * 3 + 3) // 4) * 4
@@ -1485,46 +1278,24 @@ def _parse_avi(b: bytes):
     return w, h, out
 
 
-def avi_frame_sample_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """REAL VIDEO-CONTAINER FRAME SAMPLING: parse the AVI, keep every
-    AVI_SAMPLE_EVERY-th frame, reduce each kept frame to exact integer
-    channel sums + the TOP image row's intensity (flip-sensitive, so the
-    bottom-up DIB unflip is load-bearing). Malformed payloads yield no
-    rows."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_avi(bytes(payload or b""))
-            if parsed is None:
-                continue
-            _, _, frames = parsed
-            for f, img in enumerate(frames):
-                if f % AVI_SAMPLE_EVERY:
-                    continue
-                out.append(
-                    (
-                        doc_id,
-                        f,
-                        int(img[..., 2].sum()),  # DIB stores BGR
-                        int(img[..., 1].sum()),
-                        int(img[..., 0].sum()),
-                        int(img[0].sum()),  # top image row
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "frame_no", "sum_r", "sum_g", "sum_b", "top_row_sum"],
-        )
+def _avi_frame_rows(b: bytes) -> list:
+    parsed = _parse_avi(b)
+    if parsed is None:
+        return []
+    return [
+        (f, *_channel_sums(img, bgr=True), int(img[0].sum()))  # img[0]: top image row
+        for f, img in enumerate(parsed[2])
+        if f % AVI_SAMPLE_EVERY == 0
+    ]
 
 
 def avi_frame_sample(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched real AVI frame sampling: one stats row per kept
-    frame per blob."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        avi_frame_sample_batch, schema=AVI_FRAME_SCHEMA
-    )
+    """REAL VIDEO-CONTAINER FRAME SAMPLING: parse the AVI, keep every
+    AVI_SAMPLE_EVERY-th frame, and emit one row per kept frame with its
+    exact integer channel sums + the TOP image row's intensity
+    (flip-sensitive, so the bottom-up DIB unflip is load-bearing).
+    Malformed payloads yield no rows."""
+    return map_blobs(with_payload, AVI_FRAME_SCHEMA, _avi_frame_rows)
 
 
 # --- REAL baseline-JPEG decode (lossy-codec container: custom canonical
@@ -1778,8 +1549,6 @@ def _parse_jpeg(b: bytes):
     entropy decode is numpy-vectorized: peek-LUT Huffman (one array
     lookup per symbol), batched dezigzag/dequant/IDCT (r12 — the
     per-bit Python walk was the tree's worst cross-scale kernel)."""
-    import struct
-
     import numpy as np
 
     global _JPEG_IDCT_A
@@ -2105,86 +1874,51 @@ def _parse_jpeg(b: bytes):
     return w, h, np.clip(np.floor(rgb + 0.5), 0, 255).astype(np.int64)
 
 
-def jpeg_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL LOSSY-CODEC PIXEL DECODE: full baseline JPEG entropy decode
-    (canonical Huffman, unstuffing, RST) + dequant + IDCT, reduced to
-    exact integer stats. sum_left sums the LEFT HALF of every 8-wide
-    block column (x % 8 < 4) — the statistic the horizontal-frequency AC
-    coefficient shifts by +-120 per odd block, so the Huffman AC path,
-    the zigzag ORIENTATION (index 1 must be horizontal), and the IDCT
-    cosine basis are all load-bearing in the value hash. Malformed
-    payloads return ok=False with null stats (errors as data)."""
+def _jpeg_stats(b: bytes) -> list | None:
     import numpy as np
 
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_jpeg(bytes(payload or b""))
-            if parsed is None:
-                out.append((doc_id, None, None, None, None, False))
-                continue
-            w, h, img = parsed
-            left = np.arange(w) % 8 < 4
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    int(img.sum()),
-                    int(img[:, left].sum()),
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "width", "height", "sum_px", "sum_left", "ok"],
-        )
+    parsed = _parse_jpeg(b)
+    if parsed is None:
+        return None
+    w, h, img = parsed
+    left = np.arange(w) % 8 < 4
+    return [(w, h, int(img.sum()), int(img[:, left].sum()), True)]
 
 
 def decode_jpeg(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched real baseline-JPEG decode: dims + exact pixel sums."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        jpeg_decode_batch, schema=JPEG_DECODE_SCHEMA
-    )
+    """REAL LOSSY-CODEC PIXEL DECODE: full baseline JPEG entropy decode
+    (canonical Huffman, unstuffing, RST) + dequant + IDCT, reduced to
+    dims + exact integer stats. sum_left sums the LEFT HALF of every
+    8-wide block column (x % 8 < 4) — the statistic the
+    horizontal-frequency AC coefficient shifts by +-120 per odd block, so
+    the Huffman AC path, the zigzag ORIENTATION (index 1 must be
+    horizontal), and the IDCT cosine basis are all load-bearing in the
+    value hash. Malformed payloads return ok=False with null stats
+    (errors as data)."""
+    return map_blobs(with_payload, JPEG_DECODE_SCHEMA, _jpeg_stats)
 
 
 JPEG_RESIZE_SCHEMA = "doc_id long, x long, y long, px long"
 
 
-def jpeg_resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Full lossy decode + floor-convention nearest-neighbor thumbnail in
-    ONE Arrow pass — the vision-preprocessor front over a COMPRESSED
-    format: native-resolution pixels never leave the UDF, only the
-    RESIZE_W x RESIZE_H thumbnail rows do (the same posture as
-    bmp_resize_batch, now behind a real entropy decode). Malformed
-    payloads yield no rows."""
-    import numpy as np
-
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_jpeg(bytes(payload or b""))
-            if parsed is None:
-                continue
-            w, h, img = parsed
-            xs = (np.arange(RESIZE_W) * w) // RESIZE_W
-            ys = (np.arange(RESIZE_H) * h) // RESIZE_H
-            small = img[np.ix_(ys, xs)]
-            # grayscale: the pixel; color: channel sum (one long either
-            # way — schema-stable across component counts)
-            if small.ndim == 3:
-                small = small.sum(axis=2)
-            for y in range(RESIZE_H):
-                for x in range(RESIZE_W):
-                    out.append((doc_id, x, y, int(small[y, x])))
-        yield pd.DataFrame(out, columns=["doc_id", "x", "y", "px"])
+def _jpeg_resize_rows(b: bytes) -> list:
+    parsed = _parse_jpeg(b)
+    if parsed is None:
+        return []
+    w, h, img = parsed
+    # grayscale: the pixel; color: channel sum (one long either way —
+    # schema-stable across component counts)
+    return [(x, y, int(p.sum())) for x, y, p in _nn_cells(img, w, h)]
 
 
 def resize_jpeg(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched JPEG decode + thumbnail: one row per output pixel."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        jpeg_resize_batch, schema=JPEG_RESIZE_SCHEMA
-    )
+    """Full lossy decode + floor-convention nearest-neighbour thumbnail
+    in ONE pass — the vision-preprocessor front over a COMPRESSED
+    format: native-resolution pixels never leave the UDF, only the
+    RESIZE_W x RESIZE_H thumbnail rows do (the same posture as
+    resize_bmp, behind a real entropy decode). Malformed payloads yield
+    no rows."""
+    return map_blobs(with_payload, JPEG_RESIZE_SCHEMA, _jpeg_resize_rows)
 
 
 # --- REAL compressed-image decode: GIF (LZW entropy coding) --------------
@@ -2359,8 +2093,6 @@ def _parse_gif(b: bytes):
     decode (_gif_lzw_decode), four-pass deinterlace. Returns (w, h,
     index array (h, w) in DISPLAY order, palette (n, 3) int64) or None
     on ANY malformed input (errors as data)."""
-    import struct
-
     import numpy as np
 
     if len(b) < 13 or b[:4] != b"GIF8" or b[4:6] not in (b"7a", b"9a"):
@@ -2444,52 +2176,24 @@ def _parse_gif(b: bytes):
     return None
 
 
-def gif_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL LZW IMAGE DECODE: per blob, walk the GIF container, LZW-decode
-    the pixel indices, deinterlace, map through the color table, and
-    reduce to exact integer channel sums + display-row-1's intensity
-    (the deinterlace witness — see make_gif_payload). Malformed payloads
-    return ok=False with null stats (errors as data)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            parsed = _parse_gif(bytes(payload or b""))
-            if parsed is None:
-                out.append(
-                    (doc_id, None, None, None, None, None, None, None, False)
-                )
-                continue
-            w, h, img, pal = parsed
-            rgb = pal[img]  # (h, w, 3) in display order
-            row1 = int(rgb[1].sum()) if h > 1 else 0
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    w * h,
-                    int(rgb[..., 0].sum()),
-                    int(rgb[..., 1].sum()),
-                    int(rgb[..., 2].sum()),
-                    row1,
-                    True,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "width", "height", "n_pixels", "sum_r", "sum_g",
-                "sum_b", "row1_sum", "ok",
-            ],
-        )
+def _gif_stats(b: bytes) -> list | None:
+    parsed = _parse_gif(b)
+    if parsed is None:
+        return None
+    w, h, img, pal = parsed
+    rgb = pal[img]  # (h, w, 3) in display order
+    row1 = int(rgb[1].sum()) if h > 1 else 0
+    return [(w, h, w * h, *_channel_sums(rgb, bgr=False), row1, True)]
 
 
 def decode_gif(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched real GIF/LZW decode: dims + exact channel sums +
-    the deinterlace-witness row-1 intensity."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        gif_decode_batch, schema=GIF_DECODE_SCHEMA
-    )
+    """REAL LZW IMAGE DECODE: per blob, walk the GIF container, LZW-decode
+    the pixel indices, deinterlace, map through the color table, and
+    reduce to dims + exact integer channel sums + display-row-1's
+    intensity (the deinterlace witness — see make_gif_payload).
+    Malformed payloads return ok=False with null stats (errors as
+    data)."""
+    return map_blobs(with_payload, GIF_DECODE_SCHEMA, _gif_stats)
 
 
 # --- Heterogeneous media lake: magic-byte dispatch over mixed blobs ------
@@ -2497,75 +2201,50 @@ def decode_gif(with_payload: DataFrame) -> DataFrame:
 DISPATCH_SCHEMA = "doc_id long, kind string, n_units long, checksum long"
 
 
-def dispatch_decode_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """ONE decoder pass over a MIXED media column: sniff the container by
-    magic bytes (the only honest router for a heterogeneous lake — file
-    extensions don't survive object stores) and dispatch to the real
-    BMP/PNG/JPEG/GIF/WAV/ADPCM/mu-law/AVI decoders (the RIFF/WAVE branch
-    falls through PCM -> ADPCM -> mu-law on the fmt tag). Normalized
-    output: modality-agnostic unit count (pixels / samples / frames) +
-    an exact integer checksum of every decoded value, so the value hash
-    covers all eight decode paths at once. Unrecognized/corrupt blobs
-    become kind='unknown' rows (errors as data)."""
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload or b"")
-            kind, n_units, checksum = "unknown", None, None
-            if b[:2] == BMP_MAGIC:
-                parsed = _parse_bmp(b)
-                if parsed is not None:
-                    w, h, img = parsed
-                    kind, n_units, checksum = "bmp", w * h, int(img.sum())
-            elif b[:8] == PNG_SIG:
-                parsed = _parse_png(b)
-                if parsed is not None:
-                    w, h, img = parsed
-                    kind, n_units, checksum = "png", w * h, int(img.sum())
-            elif b[:2] == JPEG_SOI:
-                parsed = _parse_jpeg(b)
-                if parsed is not None:
-                    w, h, img = parsed
-                    kind, n_units, checksum = "jpeg", w * h, int(img.sum())
-            elif b[:4] == b"GIF8":
-                parsed = _parse_gif(b)
-                if parsed is not None:
-                    w, h, img, pal = parsed
-                    kind, n_units = "gif", w * h
-                    checksum = int(pal[img].sum())
-            elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                samples = _parse_wav(b)
-                if samples is not None:
-                    kind = "wav"
-                    n_units = len(samples)
-                    checksum = int((samples + 32768).sum())  # unsigned view
-                else:
-                    samples = _parse_adpcm_wav(b)
-                    if samples is not None and samples.size:
-                        kind = "adpcm"
-                        n_units = len(samples)
-                        checksum = int((samples + 32768).sum())
-                    else:
-                        samples = _parse_mulaw_wav(b)
-                        if samples is not None and samples.size:
-                            kind = "mulaw"
-                            n_units = len(samples)
-                            checksum = int((samples + 32768).sum())
-            elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                parsed = _parse_avi(b)
-                if parsed is not None:
-                    _, _, frames = parsed
-                    kind = "avi"
-                    n_units = len(frames)
-                    checksum = int(sum(f.sum() for f in frames))
-            out.append((doc_id, kind, n_units, checksum))
-        yield pd.DataFrame(out, columns=["doc_id", "kind", "n_units", "checksum"])
+# the RIFF/WAVE codecs, tried in this order; each rejects the others' fmt tag
+_WAVE_CODECS = (
+    ("wav", _parse_wav), ("adpcm", _parse_adpcm_wav), ("mulaw", _parse_mulaw_wav)
+)
+_IMAGE_CODECS = (
+    (BMP_MAGIC, "bmp", _parse_bmp), (PNG_SIG, "png", _parse_png),
+    (JPEG_SOI, "jpeg", _parse_jpeg),
+)
+
+
+def _dispatch_rows(b: bytes) -> list:
+    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+        for kind, parse in _WAVE_CODECS:
+            samples = parse(b)
+            if samples is not None and samples.size:  # checksum of the unsigned view
+                return [(kind, len(samples), int((samples + 32768).sum()))]
+    elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+        parsed = _parse_avi(b)
+        if parsed is not None:
+            frames = parsed[2]
+            return [("avi", len(frames), int(sum(f.sum() for f in frames)))]
+    elif b[:4] == b"GIF8":
+        parsed = _parse_gif(b)
+        if parsed is not None:
+            w, h, img, pal = parsed
+            return [("gif", w * h, int(pal[img].sum()))]
+    else:
+        for magic, kind, parse in _IMAGE_CODECS:
+            parsed = parse(b) if b.startswith(magic) else None
+            if parsed is not None:
+                w, h, img = parsed
+                return [(kind, w * h, int(img.sum()))]
+    return [("unknown", None, None)]
 
 
 def dispatch_decode(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched mixed-container decode: one stats row per blob."""
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        dispatch_decode_batch, schema=DISPATCH_SCHEMA
-    )
+    """ONE decoder pass over a MIXED media column, one stats row per blob:
+    sniff the container by magic bytes (the only honest router for a
+    heterogeneous lake — file extensions don't survive object stores)
+    and dispatch to the real BMP/PNG/JPEG/GIF/WAV/ADPCM/mu-law/AVI
+    decoders (the RIFF/WAVE branch falls through PCM -> ADPCM -> mu-law
+    on the fmt tag). Normalized output: modality-agnostic unit count
+    (pixels / samples / frames) + an exact integer checksum of every
+    decoded value, so the value hash covers all eight decode paths at
+    once. Unrecognized or corrupt blobs, and WAVE blobs that decode to
+    no samples, become kind='unknown' rows (errors as data)."""
+    return map_blobs(with_payload, DISPATCH_SCHEMA, _dispatch_rows)

@@ -169,7 +169,7 @@ def mm_audio_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and windows only its partition's blobs. At 100 TB this is the VAD /
     loudness-filter front of an audio training pipeline; swapping the
     stub for soundfile/ffmpeg changes one function
-    (operators/multimodal.py::audio_window_batch)."""
+    (operators/multimodal.py::_audio_window_rows)."""
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     return MM.audio_window_stats(MM.attach_payload(docs))
 

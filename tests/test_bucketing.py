@@ -28,7 +28,8 @@ def plan_text(df, mode: str = "formatted") -> str:
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
+def bucketed_tables(module_spark, sf_dir):
+    spark = module_spark
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     write_bucketed(o, "orders_b", "o_orderkey", N_BUCKETS)

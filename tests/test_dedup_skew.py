@@ -49,7 +49,8 @@ def _corpus(spark):
 
 
 @pytest.fixture(scope="module")
-def skew_dir(spark, tmp_path_factory):
+def skew_dir(module_spark, tmp_path_factory):
+    spark = module_spark
     out = str(tmp_path_factory.mktemp("skew"))
     (
         _corpus(spark)

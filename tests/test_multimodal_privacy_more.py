@@ -473,6 +473,11 @@ def test_wav_parse_rejects_malformed_payloads():
     good = bytearray(build())
     good[0:4] = b"RIFX"  # wrong magic
     assert MM._parse_wav(bytes(good)) is None
+    # data chunk declares 1,000 bytes but carries 100: truncated, not 50 samples
+    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
+    body = b"WAVE" + fmt + b"data" + struct.pack("<I", 1000) + b"\x01" * 100
+    short = b"RIFF" + struct.pack("<I", len(body)) + body
+    assert MM._parse_wav(short) is None
 
 
 def test_jvm_wav_payload_is_a_real_wav(spark, sf_dir):
@@ -558,21 +563,46 @@ def test_dispatch_decode_covers_all_kinds_and_flags_garbage():
     """The router classifies each container by magic bytes and degrades
     to kind='unknown' rows for garbage — exercised on hand-built blobs
     without a Spark pass."""
-    import pandas as pd
+    rows = [
+        row
+        for blob in (b"not media at all", b"RIFF\x00\x00\x00\x00XXXX")
+        for row in MM._dispatch_rows(blob)
+    ]
+    assert [kind for kind, _, _ in rows] == ["unknown", "unknown"]
+    assert all(n_units is None for _, n_units, _ in rows)
 
-    batches = iter(
-        [
-            pd.DataFrame(
-                {
-                    "doc_id": [1, 2],
-                    "payload": [b"not media at all", b"RIFF\x00\x00\x00\x00XXXX"],
-                }
-            )
-        ]
+
+def test_every_decoder_survives_garbage_and_null_payloads(spark):
+    """Each of the 17 decoders runs in Spark over a garbage blob and a
+    NULL payload without failing its task: the one-row-per-blob
+    decoders return one row per blob, and the real-codec summary
+    decoders return ok=False with NULL stats."""
+    blobs = spark.createDataFrame(
+        [(1, b"\x00garbage\xff" * 3), (2, None)], "doc_id long, payload binary"
     )
-    out = pd.concat(MM.dispatch_decode_batch(batches))
-    assert out["kind"].tolist() == ["unknown", "unknown"]
-    assert out["n_units"].isna().all()
+    summaries = [
+        MM.decode_bmp, MM.decode_png, MM.decode_adpcm, MM.decode_mulaw,
+        MM.decode_jpeg, MM.decode_gif,
+    ]
+    one_row = [
+        MM.decode_media, MM.parse_image_headers, MM.phash_bands,
+        MM.dispatch_decode, *summaries,
+    ]
+    fan_out = [
+        MM.audio_window_stats, MM.frame_intensities, MM.bmp_row_intensities,
+        MM.resize_bmp, MM.wav_window_stats, MM.avi_frame_sample, MM.resize_jpeg,
+    ]
+    assert len(one_row) + len(fan_out) == 17
+    for decode in fan_out:
+        decode(blobs).collect()
+    for decode in one_row:
+        rows = decode(blobs).collect()
+        assert sorted(r["doc_id"] for r in rows) == [1, 2], decode.__name__
+        if decode in summaries:
+            for r in rows:
+                stats = {k: v for k, v in r.asDict().items() if k not in ("doc_id", "ok")}
+                assert r["ok"] is False, decode.__name__
+                assert set(stats.values()) == {None}, (decode.__name__, stats)
 
 
 def test_dispatch_decode_agrees_with_single_format_decoders(spark, sf_dir):

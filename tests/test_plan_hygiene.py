@@ -434,3 +434,23 @@ def test_neardup_steps_live_in_one_module():
     owner = (package / "operators" / "neardup.py").read_text().splitlines()
     for pattern in _NEARDUP_STEPS:
         assert sum(bool(re.search(pattern, line)) for line in owner) == 1, pattern
+
+
+# A RIFF chunk walk's step over a word-aligned chunk: `+= 8 + n + (n & 1)`.
+_RIFF_STEP = re.compile(r"\+= 8 \+ (\w+) \+ \(\1 & 1\)")
+
+
+def test_media_decoders_share_one_runner():
+    """Every media decoder in ``operators/multimodal.py`` is a ``rows``
+    function run by ``map_blobs`` (one ``mapInPandas`` call, no per-decoder
+    ``*_batch`` loop), and every RIFF parser walks chunks through
+    ``_riff_chunks`` (one word-aligned chunk step)."""
+    src = (REPO_ROOT / "ntd_gtfs_to_socrata_spark/operators/multimodal.py").read_text()
+    assert src.count("mapInPandas(") == 1
+    assert len(_RIFF_STEP.findall(src)) == 1
+    batch_defs = [
+        node.name
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.FunctionDef) and node.name.endswith("_batch")
+    ]
+    assert batch_defs == []

@@ -28,7 +28,8 @@ ROWS = [
 
 
 @pytest.fixture(scope="module")
-def socrata_df_factory(spark):
+def socrata_df_factory(module_spark):
+    spark = module_spark
     register_socrata_datasource(spark)
 
     def make(**opts):
